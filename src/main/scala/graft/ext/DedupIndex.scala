@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
  * re-bands (the corpus text never re-reads), and the new generation
  * Spark-writes ONLY one delta-sized `seg=<k>` per table plus the
  * (delta-scale) tombstone ledger — every previous segment carries
- * forward as hard links ([[graft.util.SwapCommit.linkOrCopyRec]]:
+ * forward as hard links ([[graft.util.Fs.linkOrCopyRec]]:
  * zero new bytes on local stores; per-object copy elsewhere). Dir-
  * level partial rewrites were measured NOT to help here
  * (RefreshScale: a ~1% delta hash-touches all 64 bounded dirs), so
@@ -158,7 +158,7 @@ object DedupIndex {
     * COMPACTS (full rewrite into a fresh seg=0, ledger cleared).
     * `deltaCommit = false` forces the compaction path every time —
     * the A/B hook for the write-volume instrumentation
-    * ([[graft.tools.RefreshScale]]). Legacy or degenerate
+    * ([[graft.tools.RefreshScale]]). Degenerate
     * (empty-marker) layouts fall back to the full rewrite
     * automatically. */
   def refresh(
@@ -200,7 +200,7 @@ object DedupIndex {
             tombPath(gen), drop, sv),
           () => writeParamsTable(spark, gen, k, nBands, n))
       } else {
-        // compaction / legacy / forced-full: merge the LIVE state
+        // compaction / empty-marker / forced-full: merge the LIVE state
         // (tombstones applied) with the delta into a fresh seg=0;
         // the ledger resets
         val prevB = bandsTable(spark, cur)

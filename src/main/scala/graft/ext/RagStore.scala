@@ -54,7 +54,7 @@ object RagStore {
 
   /** The committed serving view of the CURRENT generation — the read
     * a retrieval query plans against (resolve the pointer per query,
-    * the [[VectorIndex.probeGen]] discipline). */
+    * the [[VectorIndex.probe]] discipline). */
   def servingView(spark: SparkSession, root: String): DataFrame = {
     val cur = graft.util.GenSwap.currentDir(root).getOrElse(
       throw new IllegalStateException(
@@ -179,7 +179,7 @@ object RagStore {
           () => writeParamsTable(spark, gen, chunkTokens, overlap,
             maxPostings, dfCap))
       } else {
-        // compaction / legacy / forced-full: rewrite the live state
+        // compaction / empty-marker / forced-full: rewrite the live state
         // as a fresh seg=0 pair, ledgers cleared
         val pubAfter = Assemble.publishIndex(postAfter, maxPostings,
           dfCap)

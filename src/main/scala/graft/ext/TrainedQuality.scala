@@ -347,7 +347,7 @@ object TrainedQuality {
     * partition-pruned scan per segment). Past
     * [[graft.util.GenIndex.MaxSegments]] segments the refresh
     * COMPACTS; `deltaCommit = false` forces the compaction path (the
-    * A/B hook); legacy flat layouts fall back automatically. */
+    * A/B hook); the degenerate empty marker falls back automatically. */
   def refreshModel(
       spark: org.apache.spark.sql.SparkSession, root: String,
       changedDocs: DataFrame, droppedIds: DataFrame,

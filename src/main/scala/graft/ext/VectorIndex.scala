@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * and re-encoding the corpus inside every query
  * (cf. `q_ann_ivf_trained`, which certifies the in-query path).
  *
- * Layout under the index root (all parquet):
+ * Layout under each generation dir `root/gen-<n>/` (all parquet):
  *  - `centroids/`  (cell, centroid)           — nCells rows
  *  - `codebooks/`  (subspace, code, codeword) — m·k rows
  *  - `corpus/seg=<k>/` (id, codes, vec, cell, __cbucket=…) — each
@@ -21,12 +21,13 @@ import org.apache.spark.sql.functions._
  *    delta-proportional-commit layout, compacted past
  *    [[graft.util.GenIndex.MaxSegments]] segments
  *
- * Commit discipline: every build/refresh stages the full next state
- * under `<root>.staging` and swaps it in through a manifest-logged
- * whole-dir move (the FileTarget two-phase-commit pattern,
- * `targets/DataTarget.scala`): a crash anywhere between manifest
- * write and delete is completed idempotently by the next
- * open/build/refresh — readers never observe a half-written index.
+ * Commit discipline ([[graft.util.GenSwap]]): every build/refresh
+ * stages a fresh immutable generation dir and flips the `root/CURRENT`
+ * pointer to it. Every probe resolves the pointer once and plans
+ * against that generation, so a half-written index is never read,
+ * and a plan captured before a refresh keeps serving the complete
+ * previous generation until the commit after next. A crashed stage
+ * leaves an orphan dir that the next commit prunes.
  *
  * Refresh is ChangeSet-driven ([[refresh]]): re-encode ONLY the
  * added+updated vectors, drop the removed+updated ids, keep the
@@ -38,39 +39,39 @@ import org.apache.spark.sql.functions._
  */
 object VectorIndex {
 
-  private def centroidsPath(root: String) = s"$root/centroids"
-  private def codebooksPath(root: String) = s"$root/codebooks"
-  private def corpusPath(root: String) = s"$root/corpus"
-  private def tombPath(root: String) = s"$root/tomb"
-  private def manifestFile(root: String) = root + ".swap-manifest"
+  private def centroidsPath(gen: String) = s"$gen/centroids"
+  private def codebooksPath(gen: String) = s"$gen/codebooks"
+  private def corpusPath(gen: String) = s"$gen/corpus"
+  private def tombPath(gen: String) = s"$gen/tomb"
 
-  /** LIVE corpus rows (segments unioned, tombstone ledger applied) —
-    * the read every probe and refresh plans against. Public: the
-    * spec-side view of committed state. */
-  def corpusTable(spark: SparkSession, root: String): DataFrame =
+  private def committedDir(root: String): String =
+    graft.util.GenSwap.currentDir(root).getOrElse(
+      throw new IllegalStateException(
+        s"no committed generation at $root — build first"))
+
+  /** LIVE corpus rows of generation dir `gen` (segments unioned,
+    * tombstone ledger applied) — the read every probe and refresh
+    * plans against. */
+  private def corpusAt(spark: SparkSession, gen: String): DataFrame =
     graft.util.GenIndex.readSegmented(
-      spark, corpusPath(root), tombPath(root))
+      spark, corpusPath(gen), tombPath(gen))
 
-  private def commitSwap(root: String, staging: String): Unit =
-    graft.util.SwapCommit.commit(root, staging, manifestFile(root))
-
-  /** Crash recovery: a pending manifest means the last build/refresh
-    * staged fully but died mid-swap — finish it. Every reader/writer
-    * calls this first. */
-  def recover(root: String): Unit =
-    graft.util.SwapCommit.recover(root, manifestFile(root))
+  /** LIVE corpus rows of the committed generation — the spec-side view
+    * of committed state. */
+  def corpusTable(spark: SparkSession, root: String): DataFrame =
+    corpusAt(spark, committedDir(root))
 
   private def stageModel(
-      spark: SparkSession, staging: String,
+      spark: SparkSession, gen: String,
       cents: Seq[Seq[Float]], cbs: Seq[Seq[Seq[Float]]]): Unit = {
     import spark.implicits._
     cents.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cell", "centroid")
-      .repartition(1).write.parquet(centroidsPath(staging))
+      .repartition(1).write.parquet(centroidsPath(gen))
     cbs.zipWithIndex.flatMap { case (book, j) =>
       book.zipWithIndex.map { case (cw, c) => (j, c, cw) }
     }.toDF("subspace", "code", "codeword")
-      .repartition(1).write.parquet(codebooksPath(staging))
+      .repartition(1).write.parquet(codebooksPath(gen))
   }
 
   /** Fixed count of corpus partition DIRECTORIES. A `partitionBy`
@@ -97,8 +98,8 @@ object VectorIndex {
       .write.partitionBy("__cbucket").parquet(segDir)
 
   private def stageCorpus(
-      spark: SparkSession, staging: String, encoded: DataFrame): Unit = {
-    writeCorpus(spark, s"${corpusPath(staging)}/seg=0", encoded)
+      spark: SparkSession, gen: String, encoded: DataFrame): Unit = {
+    writeCorpus(spark, s"${corpusPath(gen)}/seg=0", encoded)
     // Degenerate (zero-row) corpus: a partitionBy write of an empty
     // frame leaves no data file to infer a schema from. Detected
     // driver-side AFTER the single write (a pre-probe of the plan —
@@ -107,8 +108,8 @@ object VectorIndex {
     // rewrites flat from an explicit empty frame (no plan
     // re-execution), with `__cbucket` as a data column — the probe
     // join handles that identically, it just loses pruning.
-    graft.util.GenIndex.ensureSegReadable(spark, corpusPath(staging),
-      s"${corpusPath(staging)}/seg=0",
+    graft.util.GenIndex.ensureSegReadable(spark, corpusPath(gen),
+      s"${corpusPath(gen)}/seg=0",
       encoded.withColumn("__cbucket", lit(0)).schema)
   }
 
@@ -120,13 +121,14 @@ object VectorIndex {
     * refresh COMPACTS — a full rewrite of the live state into a
     * fresh seg=0 with the ledger cleared. `deltaCommit = false`
     * forces the compaction path (the [[graft.tools.RefreshScale]]
-    * A/B hook); legacy/degenerate layouts fall back automatically. */
+    * A/B hook); the degenerate empty-corpus marker falls back
+    * automatically. */
   private def stageRefreshedCorpus(
       spark: SparkSession, dir: String, prevRoot: String,
       changedVecs: DataFrame, droppedIds: DataFrame,
       cents: Seq[Seq[Float]], cbs: Seq[Seq[Seq[Float]]],
       idCol: String, vecCol: String, deltaCommit: Boolean): Unit = {
-    val prev = corpusTable(spark, prevRoot).drop("__cbucket")
+    val prev = corpusAt(spark, prevRoot).drop("__cbucket")
     // carry EVERY corpus column except the layout bucket — metadata
     // columns a build declared ride through refreshes; changedVecs
     // must carry them under the same names
@@ -173,16 +175,14 @@ object VectorIndex {
         metaCols.map(col): _*)
 
   /**
-   * Train (centroids + codebooks) and encode the whole corpus, then
-   * commit the staged index. The ONLY full-corpus passes are ONE
-   * deterministic 2048-row training-sample scan (shared by both
-   * trainers — [[Similarity.trainSample]]) and the one encode scan.
+   * Train (centroids + codebooks) and encode the whole corpus into a
+   * fresh generation of `root`, then flip the pointer to it. The ONLY
+   * full-corpus passes are ONE deterministic 2048-row training-sample
+   * scan (shared by both trainers — [[Similarity.trainSample]]) and
+   * the one encode scan. Shared by [[build]] and [[buildAuto]].
    */
-  /** Train + encode + write a COMPLETE index layout into `dir` —
-    * shared by the in-place swap ([[build]]) and generation-pointer
-    * ([[buildGen]]) commit disciplines. */
-  private def stageFull(
-      spark: SparkSession, dir: String, corpus: DataFrame,
+  private def commitFull(
+      spark: SparkSession, root: String, corpus: DataFrame,
       nCells: Int, m: Int, k: Int, idCol: String,
       vecCol: String, sampleN: Int = 2048,
       metaCols: Seq[String] = Nil): Unit = {
@@ -198,13 +198,14 @@ object VectorIndex {
           col(vecCol).as("vec"), lit(0).as("cell")) ++
           metaCols.map(col): _*).limit(0)
       else encode(corpus, cents, cbs, idCol, vecCol, metaCols)
-    graft.util.SwapCommit.deleteRec(dir)
+    val gen = graft.util.GenSwap.nextDir(root)
     // the model tables and the encoded corpus are independent writes
-    // into the same staging dir — overlap them (the DedupIndex.build
-    // writeAll discipline); all settle before the caller commits
+    // into the same generation dir — overlap them (the DedupIndex.build
+    // writeAll discipline); all settle before the pointer flips
     graft.util.GenIndex.writeAll(
-      () => stageModel(spark, dir, cents, cbs),
-      () => stageCorpus(spark, dir, enc))
+      () => stageModel(spark, gen, cents, cbs),
+      () => stageCorpus(spark, gen, enc))
+    graft.util.GenSwap.commit(root, gen)
   }
 
   /** `metaCols`: corpus columns carried verbatim into the index's
@@ -215,13 +216,9 @@ object VectorIndex {
       spark: SparkSession, corpus: DataFrame, root: String,
       nCells: Int = 8, m: Int = 16, k: Int = 32,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      metaCols: Seq[String] = Nil): Unit = {
-    recover(root)
-    val staging = root + ".staging"
-    stageFull(spark, staging, corpus, nCells, m, k, idCol, vecCol,
+      metaCols: Seq[String] = Nil): Unit =
+    commitFull(spark, root, corpus, nCells, m, k, idCol, vecCol,
       metaCols = metaCols)
-    commitSwap(root, staging)
-  }
 
   /** [[build]] with the cell count SIZED FROM THE CORPUS
     * ([[Similarity.sizedCells]]: constant expected occupancy) — the
@@ -242,43 +239,22 @@ object VectorIndex {
       targetPerCell: Int = 256, m: Int = 16, k: Int = 32,
       idCol: String = "vec_id", vecCol: String = "embedding",
       metaCols: Seq[String] = Nil): Int = {
-    recover(root)
     val n = corpus.filter(col(vecCol).isNotNull).count()
     val nCells = Similarity.sizedCells(n, targetPerCell, floor = 8)
     val sampleN = math.min(65536, math.max(2048, 16 * nCells))
-    val staging = root + ".staging"
-    stageFull(spark, staging, corpus, nCells, m, k, idCol, vecCol,
+    commitFull(spark, root, corpus, nCells, m, k, idCol, vecCol,
       sampleN, metaCols)
-    commitSwap(root, staging)
     nCells
   }
 
-  /** [[build]] under the GENERATION-POINTER commit
-    * ([[graft.util.GenSwap]]): the index is written as an immutable
-    * `root/gen-<n>` dir and `root/CURRENT` flips to it. Use this
-    * layout when probes must keep serving ACROSS refreshes (the
-    * in-place swap fails pre-swap plans loudly — see the spec) or
-    * when the index lives on an object store, where the whole-dir
-    * rename swap is a per-object copy. */
-  def buildGen(
-      spark: SparkSession, corpus: DataFrame, root: String,
-      nCells: Int = 8, m: Int = 16, k: Int = 32,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      metaCols: Seq[String] = Nil): Unit = {
-    val gen = graft.util.GenSwap.nextDir(root)
-    stageFull(spark, gen, corpus, nCells, m, k, idCol, vecCol,
-      metaCols = metaCols)
-    graft.util.GenSwap.commit(root, gen)
-  }
-
   private def readCentroids(
-      spark: SparkSession, root: String): Seq[Seq[Float]] =
-    spark.read.parquet(centroidsPath(root)).orderBy(col("cell"))
+      spark: SparkSession, gen: String): Seq[Seq[Float]] =
+    spark.read.parquet(centroidsPath(gen)).orderBy(col("cell"))
       .collect().map(_.getSeq[Float](1).toSeq).toSeq
 
   private def readCodebooks(
-      spark: SparkSession, root: String): Seq[Seq[Seq[Float]]] =
-    spark.read.parquet(codebooksPath(root))
+      spark: SparkSession, gen: String): Seq[Seq[Seq[Float]]] =
+    spark.read.parquet(codebooksPath(gen))
       .orderBy(col("subspace"), col("code")).collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.map(_.getSeq[Float](2).toSeq).toSeq)
@@ -297,38 +273,39 @@ object VectorIndex {
   private def dirFingerprint(path: String): String =
     graft.util.Fs.fingerprint(path)
 
-  private def readModel(spark: SparkSession, root: String)
+  private def readModel(spark: SparkSession, gen: String)
       : (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) = {
-    val key = root + "#" + dirFingerprint(centroidsPath(root)) +
-      "#" + dirFingerprint(codebooksPath(root))
+    val key = gen + "#" + dirFingerprint(centroidsPath(gen)) +
+      "#" + dirFingerprint(codebooksPath(gen))
     val hit = modelCache.get(key)
     if (hit != null) return hit
     if (modelCache.size >= MaxModelEntries) modelCache.clear()
     modelCache.computeIfAbsent(key, _ =>
-      (readCentroids(spark, root), readCodebooks(spark, root)))
+      (readCentroids(spark, gen), readCodebooks(spark, gen)))
   }
 
   /**
    * ChangeSet-driven incremental refresh: `changedVecs` (added ∪
    * updated, with idCol/vecCol) re-encode under the EXISTING model;
    * `droppedIds` (removed ∪ updated, one `id` column) drop. The
-   * next state commits through the same manifest swap. The staged
-   * corpus is DELTA-PROPORTIONAL ([[stageRefreshedCorpus]]): one
-   * delta-sized segment + the tombstone ledger Spark-write; previous
-   * segments hard-link into staging, and the links survive the
-   * swap's delete of the live dir. Reader consequence (spec-pinned):
-   * a plan captured before a DELTA refresh keeps serving the
-   * complete OLD state (its segment files persist under the same
-   * names) — consistent-stale, never mixed; a COMPACTION refresh
-   * (segment bound reached, or `deltaCommit = false`) replaces the
-   * file set and fails pre-swap plans loudly.
+   * refresh reads the CURRENT generation and stages the next one into
+   * a FRESH `gen-<n+1>` dir — distinct immutable dirs, so the plan
+   * never reads what it writes: the unchanged model tables are a
+   * driver-side copy of bounded metadata (nCells + m·k rows, no Spark
+   * re-write job), and the corpus is DELTA-PROPORTIONAL
+   * ([[stageRefreshedCorpus]]): one delta-sized segment + the
+   * tombstone ledger Spark-write while previous segments hard-link
+   * forward. Then the pointer flips. The previous generation stays
+   * on disk until the commit after next, so a reader that resolved it
+   * mid-refresh keeps a complete, immutable index — zero-downtime
+   * serving (asserted in VectorIndexSpec).
    */
   def refresh(
       spark: SparkSession, root: String, changedVecs: DataFrame,
       droppedIds: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", deltaCommit: Boolean = true): Unit = {
-    recover(root)
-    val (cents, cbs) = readModel(spark, root)
+    val cur = committedDir(root)
+    val (cents, cbs) = readModel(spark, cur)
     if (cents.isEmpty || cbs.isEmpty) {
       // a degenerate (empty-corpus) build stored no model — new
       // vectors CANNOT encode against it; silently committing an
@@ -339,77 +316,13 @@ object VectorIndex {
             "before refreshing with new vectors")
       return
     }
-    // safe to plan lazily over the previous state: the staging write
-    // fully materializes into <root>.staging BEFORE commitSwap
-    // deletes the live dir
-    val staging = root + ".staging"
-    graft.util.SwapCommit.deleteRec(staging)
-    // the model tables are untouched by a refresh (retraining is a
-    // deliberate, separate build) — carry them into staging with a
-    // driver-side file copy (bounded index metadata: nCells + m·k
-    // rows) instead of two Spark re-write jobs
-    graft.util.SwapCommit.copyRec(
-      centroidsPath(root), centroidsPath(staging))
-    graft.util.SwapCommit.copyRec(
-      codebooksPath(root), codebooksPath(staging))
-    stageRefreshedCorpus(spark, staging, root,
-      changedVecs, droppedIds, cents, cbs, idCol, vecCol, deltaCommit)
-    commitSwap(root, staging)
-  }
-
-  /** [[refresh]] under the generation-pointer commit: reads the
-    * CURRENT generation, stages the merged corpus (and the unchanged
-    * model tables — a driver-side copy of bounded metadata) into a
-    * FRESH `gen-<n+1>` dir, then flips the pointer. The previous
-    * generation stays on disk until the commit after next, so a
-    * reader that resolved it mid-refresh keeps a complete, immutable
-    * index — zero-downtime serving (asserted in VectorIndexSpec). */
-  def refreshGen(
-      spark: SparkSession, root: String, changedVecs: DataFrame,
-      droppedIds: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", deltaCommit: Boolean = true): Unit = {
-    val cur = graft.util.GenSwap.currentDir(root).getOrElse(
-      throw new IllegalStateException(
-        s"no committed generation at $root — buildGen first"))
-    val (cents, cbs) = readModel(spark, cur)
-    if (cents.isEmpty || cbs.isEmpty) {
-      // same no-model guard as [[refresh]]
-      if (!changedVecs.isEmpty)
-        throw new IllegalStateException(
-          s"vector index at $root has no trained model — rebuild " +
-            "before refreshing with new vectors")
-      return
-    }
     val gen = graft.util.GenSwap.nextDir(root)
-    graft.util.SwapCommit.copyRec(centroidsPath(cur), centroidsPath(gen))
-    graft.util.SwapCommit.copyRec(codebooksPath(cur), codebooksPath(gen))
-    // unlike the in-place swap there is NO read-while-write hazard to
-    // reason about: the refresh plan reads the old generation and
-    // writes the new one — different immutable dirs by design (and
-    // the delta-narrowed path links untouched dirs between them)
+    graft.util.Fs.copyRec(centroidsPath(cur), centroidsPath(gen))
+    graft.util.Fs.copyRec(codebooksPath(cur), codebooksPath(gen))
     stageRefreshedCorpus(spark, gen, cur,
       changedVecs, droppedIds, cents, cbs, idCol, vecCol, deltaCommit)
     graft.util.GenSwap.commit(root, gen)
   }
-
-  /** [[probe]] against the CURRENT generation of a
-    * generation-pointer index; resolves the pointer once per call,
-    * then plans against that immutable dir. Empty result when no
-    * generation has committed yet (mirrors the degenerate-model
-    * probe). */
-  def probeGen(
-      spark: SparkSession, root: String, queries: DataFrame,
-      k: Int, nProbe: Int, shortlist: Int = 50,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      filter: Option[Column] = None): DataFrame =
-    graft.util.GenSwap.currentDir(root) match {
-      case Some(cur) =>
-        probe(spark, cur, queries, k, nProbe, shortlist, idCol, vecCol,
-          filter)
-      case None =>
-        queries.select(col(idCol).as("q_id"), col(idCol).as("n_id"),
-          lit(0.0).as("sim"), lit(1).as("rank")).limit(0)
-    }
 
   /** Ingest-time SEMANTIC dedup served from the persisted index —
     * the embedding-space twin of [[DedupIndex.probe]]'s minhash
@@ -486,13 +399,16 @@ object VectorIndex {
       filter: Option[Column] = None,
       broadcastQueries: Boolean = true): DataFrame = {
     require(shortlist >= k, "shortlist must be >= k")
-    recover(root)
-    val (cents, cbs) = readModel(spark, root)
+    // resolve the pointer ONCE: model and corpus come from the same
+    // immutable generation. A never-built root (no generation) and a
+    // degenerate build (no model) both probe empty.
+    val cur = graft.util.GenSwap.currentDir(root)
+    val (cents, cbs) = cur.map(readModel(spark, _)).getOrElse((Nil, Nil))
     if (cents.isEmpty || cbs.isEmpty)
       return queries.select(col(idCol).as("q_id"), col(idCol).as("n_id"),
         lit(0.0).as("sim"), lit(1).as("rank")).limit(0)
     val corpus = filter.foldLeft(
-      corpusTable(spark, root))((c, f) => c.filter(f))
+      corpusAt(spark, cur.get))((c, f) => c.filter(f))
 
     // spread() the query side: the normalize + centroid-probe
     // projection is the CPU-heavy per-query stage, and a bulk ingest
@@ -508,26 +424,20 @@ object VectorIndex {
     // must — ADC needs it), but the shortlist WINDOW exchange ships
     // only (q_id, id, adc): the d-dim vectors are projected away
     // before the shuffle and re-joined for the tiny surviving set.
-    // The join key includes the `__cbucket` PARTITION column when the
-    // layout has it (dynamic partition pruning to the probed buckets;
-    // row-group stats on the within-bucket-sorted `cell` prune the
-    // rest) — `cell` alone on pre-bucketing or degenerate-flat
-    // layouts. ADC per pair via the native PqAdcScore kernel
-    // (identity as in pqTopK: Σ_j dot(q_j, cw_{j,code_j}) =
+    // The join key includes the `__cbucket` PARTITION column (dynamic
+    // partition pruning to the probed buckets; row-group stats on the
+    // within-bucket-sorted `cell` prune the rest — the degenerate flat
+    // marker carries it as a data column). ADC per pair via the
+    // native PqAdcScore kernel (identity as in pqTopK:
+    // Σ_j dot(q_j, cw_{j,code_j}) =
     // dot(q, concat_j cw)) — no per-pair reconstruction array, no
     // interpreted HOF decode.
-    val bucketed = corpus.columns.contains("__cbucket")
-    val corpusKeys = if (bucketed)
-      corpus.select(col("id"), col("codes"), col("cell"),
-        col("__cbucket"))
-    else corpus.select(col("id"), col("codes"), col("cell"))
-    val qKeyed = if (bucketed)
-      q.withColumn("__cbucket", bucketOfCell(col("cell")))
-    else q
-    val joinKeys = if (bucketed) Seq("cell", "__cbucket") else Seq("cell")
+    val corpusKeys = corpus.select(col("id"), col("codes"), col("cell"),
+      col("__cbucket"))
+    val qKeyed = q.withColumn("__cbucket", bucketOfCell(col("cell")))
     val scored = corpusKeys
       .join(if (broadcastQueries) broadcast(qKeyed) else qKeyed,
-        joinKeys)
+        Seq("cell", "__cbucket"))
       .filter(col("q_id") =!= col("id"))
       .select(col("q_id"), col("id"),
         graft.functions.GraftFunctions.pq_adc_score(

@@ -68,8 +68,11 @@ final class ImportServiceException(msg: String) extends RuntimeException(msg)
 
 /**
  * Orchestration (reference: Classes/ImportService.php:71-107):
- * load → preComputeChanges → diff → guards → add → update → remove →
- * finalize, with the event surface around each phase.
+ * load → preComputeChanges → diff → add → update → remove →
+ * finalize, with the event surface around each phase. The
+ * reference's skip-flag guards (ImportService.php:77-82) have no
+ * counterpart: the diff receives the flags and never emits a skipped
+ * branch ([[Preset.computeDataChanges]]).
  *
  * Phase ORDER is preserved (add→update→remove); per-record order
  * within a phase is relaxed — a distributed engine has no insertion
@@ -92,19 +95,6 @@ final class ImportService(preset: Preset) {
     dispatch(ImportEvent.PreComputeChanges, data)
     val changeSet = preset.computeDataChanges(spark, data, forceUpdates)
     dispatch(ImportEvent.PreImportData, changeSet)
-
-    // Guards BEFORE any write (ImportService.php:77-82). With our
-    // diff the skip flags already zero the branches, so these fire
-    // only for targets that ignore the flags — same belt-and-braces
-    // as the reference.
-    if (preset.skipAddedRecords && !changeSet.added.isEmpty)
-      throw new ImportServiceException(
-        "This preset is configured to skip added records, but the data " +
-          "target returned new records.")
-    if (preset.skipRemovedRecords && !changeSet.removedIds.isEmpty)
-      throw new ImportServiceException(
-        "This preset is configured to skip removed records, but the data " +
-          "target returned removed records.")
 
     // The target owns phase sequencing, so it dispatches the nine
     // phase events (Pre/Do/Post × add/update/remove) in reference

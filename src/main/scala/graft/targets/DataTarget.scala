@@ -332,8 +332,9 @@ final case class FileTarget(
   /** Raw-entry overload — also carries the bucketed whole-dir swap
     * (`*:swap`: the staging dir itself replaces the live dir).
     * Written tmp-then-rename through the path's Hadoop `FileSystem`
-    * (atomic on local/HDFS; see the object-store caveat on
-    * [[graft.util.SwapCommit]]). */
+    * (atomic on local/HDFS; on object stores rename is a per-object
+    * copy, so a replayed swap is crash-consistent but a concurrent
+    * reader can observe the window mid-rename). */
   private def writeManifest(staging: String, entries: Seq[String]): Unit = {
     val m = graft.util.Fs.path(manifestFile)
     val fs = graft.util.Fs.fsOf(m)
@@ -384,7 +385,7 @@ final case class FileTarget(
         case _ => if (fs.exists(dst)) { fs.delete(dst, true); () }
       }
     }
-    graft.util.SwapCommit.deleteRec(staging)
+    graft.util.Fs.deleteRec(staging)
     mfs.delete(m, false)
     ()
   }
@@ -544,7 +545,7 @@ final case class FileTarget(
   override def removeAll(spark: SparkSession): Long = {
     recoverPendingSwap(spark)
     val n = if (exists) currentStateNoRecover(spark).count() else 0L
-    graft.util.SwapCommit.deleteRec(path)
+    graft.util.Fs.deleteRec(path)
     if (buckets > 0) spark.sql(s"DROP TABLE IF EXISTS $tableName")
     n
   }

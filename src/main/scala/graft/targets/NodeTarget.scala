@@ -54,16 +54,10 @@ import org.apache.spark.sql.types._
  * per-sync variant-collapsing aggregation + shuffle over the full
  * node table (the 100 TB win: the per-sync read scales with record
  * count, not variant fan-out, and skips the aggregation exchange).
- * The full-table aggregation remains as the fallback for state dirs
- * that predate the index and as the rebuild after [[removeAll]].
+ * [[removeAll]] evolves the index by the under-root id set.
  *
- * LEGACY LAYOUTS: state dirs written before the generation layout —
- * or seeded externally by a plain `df.write.parquet(path)` — hold the
- * table flat under `path` (optionally with a pending in-place
- * swap manifest). [[resolvedDir]] recovers any pending legacy swap,
- * then reads flat state when no pointer exists; the first commit
- * migrates: it writes `gen-0`, flips the pointer, and sweeps the
- * legacy flat files ([[graft.util.GenSwap.cleanupForeign]]).
+ * A `path` with no CURRENT pointer holds no state: the first sync
+ * adds every record.
  *
  * STORAGE: every probe and commit goes through the Hadoop
  * `FileSystem` of the state path ([[graft.util.Fs]]), so the layout
@@ -103,19 +97,10 @@ final case class NodeTarget(
         StructField("version", LongType),
         StructField("hidden", BooleanType))))
 
-  private def manifestFile = path + ".swap-manifest"
-
-  /** Resolve the COMMITTED state dir: the generation named by the
-    * CURRENT pointer (every commit writes this layout), or the legacy
-    * flat dir itself — pre-generation states and externally seeded
-    * tables (`df.write.parquet(path)`). A pending LEGACY in-place
-    * swap (crashed pre-generation writer) is completed first. */
-  private def resolvedDir(): Option[String] = {
-    graft.util.SwapCommit.recover(path, manifestFile)
-    graft.util.GenSwap.currentDir(path).orElse(
-      if (graft.util.Fs.hasData(path, acceptDirs = false)) Some(path)
-      else None)
-  }
+  /** The COMMITTED state dir: the generation named by the CURRENT
+    * pointer. */
+  private def resolvedDir(): Option[String] =
+    graft.util.GenSwap.currentDir(path)
 
   /** The committed node table (empty-schema frame before the first
     * commit) — the read surface for consumers: a raw
@@ -123,9 +108,8 @@ final case class NodeTarget(
     * state moved under generation dirs. */
   def table(spark: SparkSession): DataFrame = nodes(spark)
 
-  /** Resolved committed state dir (generation dir, or the legacy flat
-    * dir) — exposed for tools/tests that inspect the on-disk layout
-    * (e.g. the `_dstate` index files). */
+  /** Resolved committed generation dir — exposed for tools/tests that
+    * inspect the on-disk layout (e.g. the `_dstate` index files). */
   def stateDirResolved: Option[String] = resolvedDir()
 
   private def nodes(spark: SparkSession): DataFrame =
@@ -134,29 +118,12 @@ final case class NodeTarget(
       case None => emptyState(spark)
     }
 
-  /** The narrow keyed index, or the legacy full-table aggregation for
-    * state dirs written before the index existed. */
+  /** The narrow keyed index: one row per record id. */
   private def dstate(spark: SparkSession): DataFrame =
     resolvedDir() match {
       case None => emptyDstate(spark)
-      case Some(d) =>
-        if (graft.util.Fs.isDir(s"$d/_dstate"))
-          spark.read.parquet(s"$d/_dstate")
-        else dstateOf(spark.read.parquet(d))
+      case Some(d) => spark.read.parquet(s"$d/_dstate")
     }
-
-  /** The legacy/rebuild aggregation: collapse a node table to one row
-    * per record id — version = max over variants, hidden iff ALL
-    * variants hidden (an un-hidden variant still syncs normally),
-    * containers excluded. Used for state dirs that predate the index
-    * and to rebuild the index after [[removeAll]] (whose path
-    * predicate the narrow index cannot evaluate). */
-  private def dstateOf(nodeTable: DataFrame): DataFrame =
-    nodeTable
-      .filter(!col("identifier").startsWith(AutoParent))
-      .groupBy(col("identifier").as("id"))
-      .agg(max(col("version")).as("version"),
-        min(col("hidden").cast("int")).cast("boolean").as("hidden"))
 
   /** Stage `next` (+ its `_dstate` index) into a fresh immutable
     * generation dir and flip the pointer ([[graft.util.GenSwap]]) —
@@ -164,9 +131,6 @@ final case class NodeTarget(
     * commit atomically by construction; a crash mid-stage leaves an
     * orphaned never-referenced dir the next commit's cleanup removes,
     * and in-flight readers of the previous generation keep serving.
-    * The first commit over a legacy flat layout migrates it: the
-    * `next` plan reads the flat files lazily while the write lands in
-    * the (distinct) generation subdir, then the legacy files sweep.
     *
     * `overlap` (an independent action over the already-materialized
     * diff — the phase-stats aggregation) runs CONCURRENTLY with the
@@ -197,7 +161,7 @@ final case class NodeTarget(
     // containers keep the node table itself non-empty.)
     if (!graft.util.Fs.hasData(s"$staging/_dstate",
         acceptDirs = false, requireBytes = true)) {
-      graft.util.SwapCommit.deleteRec(s"$staging/_dstate")
+      graft.util.Fs.deleteRec(s"$staging/_dstate")
       val spark = dstateNext.sparkSession
       spark.createDataFrame(
         spark.sparkContext.parallelize(
@@ -207,12 +171,6 @@ final case class NodeTarget(
     val a = scala.concurrent.Await.result(
       overlapF, scala.concurrent.duration.Duration.Inf)
     graft.util.GenSwap.commit(path, staging)
-    // legacy-layout migration sweep: once a generation owns the
-    // state, the old flat files (and any stale legacy staging) go —
-    // idempotent, and a crash before the sweep is harmless (readers
-    // prefer the pointer; the next commit retries)
-    graft.util.GenSwap.cleanupForeign(path)
-    graft.util.SwapCommit.deleteRec(path + ".staging")
     a
   }
 
@@ -421,10 +379,6 @@ final case class NodeTarget(
     * evolves by the under-root id set the return count already
     * computes. */
   override def removeAll(spark: SparkSession): Long = {
-    // resolvedDir recovers a pending LEGACY swap before the existence
-    // check: a legacy writer that crashed between deleting the live
-    // dir and renaming the staging in leaves no live dir — a naive
-    // check would read that as "no state" and skip the prune
     if (resolvedDir().isEmpty) return 0L
     val under = col("path").startsWith(rootPath.stripSuffix("/") + "/")
     val all = nodes(spark).cache()
@@ -435,7 +389,7 @@ final case class NodeTarget(
     val n = idsUnder.count()
     if (!softDelete && all.filter(!under).isEmpty) {
       // nothing survives — drop the state wholesale, no empty rewrite
-      graft.util.SwapCommit.deleteRec(path)
+      graft.util.Fs.deleteRec(path)
     } else {
       val oldD = dstate(spark)
       val (next, nextD) =

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
  * different syncs would share an ordinal and the history could not
  * distinguish them. `max(sync_in)+1` cannot provide that (it stalls
  * on a no-change sync); a driver-side marker is exact. The marker is
- * recorded after the staged snapshot write and before the swap
- * commit, so a failed/retried stage reuses its ordinal instead of
+ * recorded after the staged snapshot write and before the pointer
+ * flip, so a failed/retried stage reuses its ordinal instead of
  * burning it; a crash between marker and commit leaves a gap in the
  * sequence — harmless, ordinals are opaque and increasing.
  *
@@ -51,62 +51,45 @@ final case class Scd2Target(
 
   private def dataDir = s"$path/data"
   private def ledgerDir = s"$path/_applies"
-  private def manifestFile = s"$path/data.swap-manifest"
 
   /** Resolve the COMMITTED history dir: `$path/data` is a GENERATION
     * ROOT ([[graft.util.GenSwap]]) — every apply/compact writes a
     * fresh immutable `data/gen-<n>/` and flips `data/CURRENT`, so
     * time-travel readers holding the previous generation survive a
     * concurrent sync (two-refresh limit — see GenSwap) and object-
-    * store commits are O(pointer). Legacy flat layouts (pre-
-    * generation states) read as themselves after completing any
-    * pending in-place swap; the first commit migrates them. */
-  private def resolvedDataDir(): Option[String] = {
-    graft.util.SwapCommit.recover(dataDir, manifestFile)
-    graft.util.GenSwap.currentDir(dataDir).orElse(
-      if (graft.util.Fs.list(dataDir)
-          .exists(_.getPath.getName.endsWith(".parquet"))) Some(dataDir)
-      else None)
-  }
+    * store commits are O(pointer). */
+  private def resolvedDataDir(): Option[String] =
+    graft.util.GenSwap.currentDir(dataDir)
 
-  /** Resolved committed history dir (generation dir, or the legacy
-    * flat dir) — exposed for tools/tests that inspect file layout. */
+  /** Resolved committed history generation dir — exposed for
+    * tools/tests that inspect file layout. */
   def dataDirResolved: Option[String] = resolvedDataDir()
-
-  /** Commit `staged` (a fully-written next generation) and sweep any
-    * legacy flat files the first post-migration commit leaves. */
-  private def commitGen(staged: String): Unit = {
-    graft.util.GenSwap.commit(dataDir, staged)
-    graft.util.GenSwap.cleanupForeign(dataDir)
-    graft.util.SwapCommit.deleteRec(s"$path/data.staging")
-  }
-
-  private def exists: Boolean = resolvedDataDir().nonEmpty
 
   /** Full history table (empty two-column frame before first write —
     * callers project their expected schema stably, the
     * q_sync_incremental convention). */
-  def history(spark: SparkSession): DataFrame = {
-    if (!exists)
-      // the empty frame's columns come from the CONFIGURED id/version
-      // names — hardcoding ("id", "version") made currentState's
-      // col(idColumn) unresolvable on the first sync of a target with
-      // a non-default idColumn
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.types.StructField(idColumn,
-            org.apache.spark.sql.types.StringType) +:
-          versionColumn.map(vc =>
-            org.apache.spark.sql.types.StructField(vc,
-              org.apache.spark.sql.types.LongType)).toSeq))
-    else spark.read.parquet(resolvedDataDir().get)
-  }
+  def history(spark: SparkSession): DataFrame =
+    resolvedDataDir() match {
+      case Some(d) => spark.read.parquet(d)
+      case None =>
+        // the empty frame's columns come from the CONFIGURED id/version
+        // names — hardcoding ("id", "version") made currentState's
+        // col(idColumn) unresolvable on the first sync of a target
+        // with a non-default idColumn
+        spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](),
+          org.apache.spark.sql.types.StructType(
+            org.apache.spark.sql.types.StructField(idColumn,
+              org.apache.spark.sql.types.StringType) +:
+            versionColumn.map(vc =>
+              org.apache.spark.sql.types.StructField(vc,
+                org.apache.spark.sql.types.LongType)).toSeq))
+    }
 
   /** This apply's sync ordinal = number of recorded prior applies
     * (see the ledger note in the class doc). Record the marker with
     * [[recordOrdinal]] AFTER the staged snapshot write succeeds and
-    * BEFORE the swap commits: a failed/retried stage never burns an
+    * BEFORE the pointer flips: a failed/retried stage never burns an
     * ordinal (re-stage reuses it), and a marker always precedes the
     * commit that makes its ordinal visible, so two applies can never
     * share one — gaps remain possible (crash between marker and
@@ -206,7 +189,7 @@ final case class Scd2Target(
     val staging = graft.util.GenSwap.nextDir(dataDir)
     next.write.mode("overwrite").parquet(staging)
     recordOrdinal(k) // after staging, before commit — see ledgerCount
-    commitGen(staging)
+    graft.util.GenSwap.commit(dataDir, staging)
 
     // counts AFTER the write: the write materializes the lazy
     // localCheckpoint, so this re-scans in-memory blocks (the r12
@@ -227,8 +210,8 @@ final case class Scd2Target(
    * the bytes. Rewrite the history into
    * `ceil(totalBytes / targetFileBytes)` files, sorted by
    * (`sync_in`, id) so parquet row-group stats on `sync_in` prune
-   * time-travel reads, committed through the SAME manifest-logged
-   * swap as a sync. Content is byte-identical and the apply LEDGER
+   * time-travel reads, committed through the SAME generation flip as
+   * a sync. Content is byte-identical and the apply LEDGER
    * is untouched (compaction is not a sync — it must not burn an
    * ordinal), so `stateAt(k)` is preserved for every k — the spec's
    * contract. Returns the post-compaction file count, or −1 if
@@ -250,18 +233,16 @@ final case class Scd2Target(
       .coalesce(want.toInt)
       .sortWithinPartitions(col("sync_in"), col(idColumn))
       .write.mode("overwrite").parquet(staging)
-    commitGen(staging) // no recordOrdinal: content-preserving rewrite
+    // no recordOrdinal: a content-preserving rewrite is not a sync
+    graft.util.GenSwap.commit(dataDir, staging)
     dataFiles(resolvedDataDir().get).size.toLong
   }
 
   /** Prune = SOFT-close every current row at a fresh ordinal — the
     * history is the point of this target; nothing is deleted. */
   override def removeAll(spark: SparkSession): Long = {
-    // resolvedDataDir recovers a pending LEGACY swap before the
-    // existence check (a legacy writer that crashed between delete
-    // and rename left no live dir — same fix as NodeTarget)
-    if (!exists) return 0L
     val h = history(spark)
+    // never written: the empty history has no validity columns
     if (!h.columns.contains("sync_out")) return 0L
     val n = h.filter(col("sync_out").isNull).count()
     if (n > 0) {
@@ -271,7 +252,7 @@ final case class Scd2Target(
       val staging = graft.util.GenSwap.nextDir(dataDir)
       next.write.mode("overwrite").parquet(staging)
       recordOrdinal(k) // after staging, before commit — see ledgerCount
-      commitGen(staging)
+      graft.util.GenSwap.commit(dataDir, staging)
     }
     n
   }

@@ -29,7 +29,7 @@ object AnnBuildProf {
     val cbs = t("pq")(
       graft.ext.Similarity.trainPqCodebooksOnSample(sample, m = 16, k = 32))
     val root = s"${System.getProperty("java.io.tmpdir")}/annprof-idx"
-    graft.util.SwapCommit.deleteRec(root)
+    graft.util.Fs.deleteRec(root)
     t("encode+write") {
       val enc = graft.util.Tables.spread(e).select(
         col("vec_id").as("id"),
@@ -40,13 +40,13 @@ object AnnBuildProf {
       enc.repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(root)
     }
-    graft.util.SwapCommit.deleteRec(root)
+    graft.util.Fs.deleteRec(root)
     val root2 = s"${System.getProperty("java.io.tmpdir")}/annprof-idx2"
-    graft.util.SwapCommit.deleteRec(root2)
+    graft.util.Fs.deleteRec(root2)
     t("buildAuto e2e")(
       graft.ext.VectorIndex.buildAuto(spark, e, root2,
         targetPerCell = 256, m = 16, k = 32))
-    graft.util.SwapCommit.deleteRec(root2)
+    graft.util.Fs.deleteRec(root2)
     // replicate the AnnScale preamble (brute-force truth) to see
     // whether it contaminates a following build
     val queries = e.filter(col("vec_id") % 100 === 0)
@@ -58,7 +58,7 @@ object AnnBuildProf {
     t("buildAuto after-bf")(
       graft.ext.VectorIndex.buildAuto(spark, e, root2,
         targetPerCell = 256, m = 16, k = 32))
-    graft.util.SwapCommit.deleteRec(root2)
+    graft.util.Fs.deleteRec(root2)
     spark.stop()
   }
 }

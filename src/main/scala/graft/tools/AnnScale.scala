@@ -37,7 +37,7 @@ object AnnScale {
         nProbe: Int): Unit = {
       // never under <dir> — the testdata dirs are read-only
       val root = s"${System.getProperty("java.io.tmpdir")}/annscale-$tag"
-      graft.util.SwapCommit.deleteRec(root)
+      graft.util.Fs.deleteRec(root)
       val tb0 = System.nanoTime()
       val cells = nCellsOrAuto match {
         case Some(c) =>
@@ -65,7 +65,7 @@ object AnnScale {
       println(f"[annscale] $tag%-12s n=$n%8d cells=$cells%5d " +
         f"nProbe=$nProbe%3d build=$buildS%7.2fs probe=$probeS%7.2fs " +
         f"recall@5=$recall%.3f")
-      graft.util.SwapCommit.deleteRec(root)
+      graft.util.Fs.deleteRec(root)
     }
 
     // pinned certification shape: 8 cells, total coverage

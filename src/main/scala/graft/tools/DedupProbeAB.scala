@@ -25,7 +25,7 @@ object DedupProbeAB {
     val batch = d.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id").cast("string").as("id"), col("text"))
     val root = s"${System.getProperty("java.io.tmpdir")}/dedupprobeab"
-    graft.util.SwapCommit.deleteRec(root)
+    graft.util.Fs.deleteRec(root)
     val tb0 = System.nanoTime()
     graft.ext.DedupIndex.build(spark, corpus, root, k = 32, bands = 8,
       n = 3, idCol = "id", textCol = "text", baseHash = hash)

@@ -32,7 +32,7 @@ object IngestScale {
     val corpus = e.filter(col("vec_id") % 5 =!= 4)
     val batch = e.filter(col("vec_id") % 5 === 4)
     val root = s"${System.getProperty("java.io.tmpdir")}/ingestscale"
-    graft.util.SwapCommit.deleteRec(root)
+    graft.util.Fs.deleteRec(root)
     val tb0 = System.nanoTime()
     val cells =
       if (pinned) {

@@ -64,7 +64,7 @@ object ProfileNode {
       timed("readback") {
         NodeTarget(path).table(spark).count()
       }
-      graft.util.SwapCommit.deleteRec(new java.io.File(root))
+      graft.util.Fs.deleteRec(root)
     }
 
     // ── intra-sync breakdown: replay sync1+sync2 manually, timing
@@ -118,7 +118,7 @@ object ProfileNode {
       timed("applyChanges") {
         tg2.applyChanges(spark, cs, mapper, (_, _) => ())
       }
-      graft.util.SwapCommit.deleteRec(new java.io.File(root))
+      graft.util.Fs.deleteRec(root)
     }
     spark.stop()
   }

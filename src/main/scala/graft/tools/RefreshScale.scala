@@ -111,15 +111,15 @@ object RefreshScale {
       for (mode <- Seq(true, false)) {
         val root = s"$tmp/vidx_$mode"
         measure(s"vector buildAuto (delta=$mode twin)") {
-          graft.ext.VectorIndex.buildGen(spark, corpus, root,
+          graft.ext.VectorIndex.build(spark, corpus, root,
             nCells = graft.ext.Similarity.sizedCells(
               corpus.count(), 256, floor = 8))
         }
-        measure(s"vector refreshGen delta=$mode") {
-          graft.ext.VectorIndex.refreshGen(spark, root, changed,
+        measure(s"vector refresh delta=$mode") {
+          graft.ext.VectorIndex.refresh(spark, root, changed,
             dropped, deltaCommit = mode)
         }
-        reportGen(s"vector refreshGen delta=$mode", root)
+        reportGen(s"vector refresh delta=$mode", root)
       }
     }
 

@@ -14,44 +14,22 @@ import org.apache.spark.sql.functions._
  * build/refresh stages a fresh immutable `root/gen-<n>` and flips
  * `root/CURRENT` — O(pointer) commits on object stores, in-flight
  * readers of the previous generation survive one concurrent refresh,
- * crashes leave only orphaned never-referenced dirs. Legacy roots
- * written by the pre-generation in-place swap read transparently
- * (any pending legacy swap completes first) and migrate on their
- * next commit.
+ * crashes leave only orphaned never-referenced dirs. Each generation
+ * holds a segmented `table/` plus its `tomb/` ledger ([[GenIndex]]).
  */
 object BucketedSwapIndex {
 
-  def manifest(root: String): String = root + ".swap-manifest"
+  /** The committed generation dir. None ⇔ never built. */
+  def resolve(root: String): Option[String] = GenSwap.currentDir(root)
 
-  /** Resolve the committed index dir: generation pointer, or the
-    * legacy flat/partitioned root itself (completing a crashed legacy
-    * swap first). None ⇔ never built. */
-  def resolve(root: String): Option[String] = {
-    SwapCommit.recover(root, manifest(root))
-    GenSwap.currentDir(root).orElse(
-      // legacy = bucket partition dirs or flat part files at the top
-      // level; an orphaned gen-* dir (crashed first stage) is NOT
-      // legacy data — the root is simply unbuilt
-      if (Fs.list(root).exists { st =>
-        val n = st.getPath.getName
-        (st.isDirectory && !n.startsWith("gen-")) || n.startsWith("part-")
-      }) Some(root)
-      else None)
-  }
-
-  /** Read the committed index's LIVE rows (throws like
-    * `spark.read.parquet` on a never-built root — the callers'
-    * historical contract). Generations written by [[stageAndSwap]] /
-    * [[refreshAndSwap]] hold a segmented `table/` + `tomb/` ledger
-    * ([[GenIndex.readSegmented]] masking, keyed on `media_id`);
-    * legacy generations (rows at the generation top level) and
-    * pre-generation flat roots read through unchanged. */
+  /** Read the committed index's LIVE rows: the generation's segmented
+    * `table/` masked by its `tomb/` ledger ([[GenIndex.readSegmented]],
+    * keyed on `media_id`). Throws like `spark.read.parquet` on a
+    * never-built root. */
   def read(spark: SparkSession, root: String): DataFrame = {
     val dir = resolve(root).getOrElse(root)
-    if (Fs.isDir(s"$dir/table"))
-      GenIndex.readSegmented(spark, s"$dir/table", s"$dir/tomb",
-        idCol = IdCol)
-    else spark.read.parquet(dir)
+    GenIndex.readSegmented(spark, s"$dir/table", s"$dir/tomb",
+      idCol = IdCol)
   }
 
   /** The id column the tombstone ledger masks on — every clip-index
@@ -69,8 +47,7 @@ object BucketedSwapIndex {
 
   /**
    * Stage `rows` + `bucket = pmod(bucketOf, buckets)` as segment 0 of
-   * a fresh generation, then flip the pointer (sweeping legacy flat
-   * files on the first post-migration commit).
+   * a fresh generation, then flip the pointer.
    *
    * Degenerate (zero-row) input: a partitionBy write of an empty
    * frame leaves no data file to infer a schema from — detect
@@ -89,15 +66,13 @@ object BucketedSwapIndex {
     GenIndex.ensureSegReadable(spark, s"$staging/table",
       s"$staging/table/seg=0", bucketed.schema)
     GenSwap.commit(root, staging)
-    GenSwap.cleanupForeign(root)
-    SwapCommit.deleteRec(root + ".staging")
   }
 
   /** ChangeSet-driven refresh with the DELTA-PROPORTIONAL commit
     * ([[GenIndex]] segment/tombstone layout): Spark writes ONE
     * delta-sized segment plus the dropped-id ledger; previous
     * segments hard-link into the new generation; past
-    * [[GenIndex.MaxSegments]] segments (or on legacy layouts) the
+    * [[GenIndex.MaxSegments]] segments (or over the empty marker) the
     * refresh COMPACTS — live state ∖ drops ∪ delta rewritten as a
     * fresh seg=0 with the ledger cleared. `dropIds` carries one `id`
     * column (matched against the table's `media_id`). */
@@ -108,9 +83,7 @@ object BucketedSwapIndex {
     val cur = resolve(root).getOrElse(
       throw new IllegalStateException(
         s"no committed clip index at $root — build first"))
-    val segs =
-      if (Fs.isDir(s"$cur/table")) GenIndex.segValues(s"$cur/table")
-      else Seq.empty
+    val segs = GenIndex.segValues(s"$cur/table")
     val gen = GenSwap.nextDir(root)
     if (segs.nonEmpty && segs.size < GenIndex.MaxSegments) {
       val sv = segs.max + 1
@@ -135,7 +108,5 @@ object BucketedSwapIndex {
         s"$gen/table/seg=0", bucketed.schema)
     }
     GenSwap.commit(root, gen)
-    GenSwap.cleanupForeign(root)
-    SwapCommit.deleteRec(root + ".staging")
   }
 }

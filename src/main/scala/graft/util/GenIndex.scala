@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StructType
  *    delta-proportional-commit primitive — a refresh Spark-writes
  *    ONLY the `partCol=value` dirs its delta touches and carries
  *    every untouched dir forward via
- *    [[SwapCommit.linkOrCopyRec]] (hard links locally: zero new
+ *    [[Fs.linkOrCopyRec]] (hard links locally: zero new
  *    bytes; per-object copy on stores without links), so a 0.1%
  *    daily delta stops costing a full-index write volume per commit.
  */
@@ -37,7 +37,7 @@ object GenIndex {
   def ensureReadable(
       spark: SparkSession, path: String, schema: => StructType): Unit =
     if (!Fs.hasData(path, acceptDirs = true)) {
-      SwapCommit.deleteRec(path)
+      Fs.deleteRec(path)
       spark.createDataFrame(
         spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
         .write.parquet(path)
@@ -92,7 +92,7 @@ object GenIndex {
     }
 
   /** Carry every partition dir of `prevTable` NOT in `touched` into
-    * `newTable` without a rewrite ([[SwapCommit.linkOrCopyRec]]).
+    * `newTable` without a rewrite ([[Fs.linkOrCopyRec]]).
     * `touched` holds the string forms of the partition values the
     * refresh Spark-wrote (integer buckets print identically in the
     * dir name and `String.valueOf`). Returns the carried-dir count.
@@ -110,7 +110,7 @@ object GenIndex {
     val untouched = partitionValues(prevTable, partCol)
       .filterNot(touched)
     untouched.foreach { v =>
-      SwapCommit.linkOrCopyRec(
+      Fs.linkOrCopyRec(
         s"$prevTable/$partCol=$v", s"$newTable/$partCol=$v")
     }
     untouched.size
@@ -140,9 +140,9 @@ object GenIndex {
   // delta-proportional AMORTIZED (one full write per MaxSegments
   // refreshes), the standard LSM trade.
 
-  /** Segment ordinals present under a segmented table; empty for
-    * legacy flat layouts and the degenerate empty marker (callers
-    * fall back to a full rewrite there). */
+  /** Segment ordinals present under a segmented table; empty for the
+    * degenerate empty marker (callers fall back to a full rewrite
+    * there). */
   def segValues(tableDir: String): Seq[Long] =
     partitionValues(tableDir, "seg").flatMap(_.toLongOption)
 
@@ -152,7 +152,7 @@ object GenIndex {
   /** Read a segmented table's LIVE rows: union the segments, mask by
     * the tombstone ledger, drop the bookkeeping `seg` column (inner
     * partition columns — `__bbucket` et al. — remain for pruning).
-    * Non-segmented (legacy / empty-marker) layouts read through
+    * The flat empty marker ([[ensureSegReadable]]) reads through
     * unchanged. The mask join is left unhinted: the ledger is
     * delta × [[MaxSegments]] rows, so Spark's size estimate picks a
     * broadcast for the normal case without pinning one on a
@@ -174,10 +174,10 @@ object GenIndex {
   }
 
   /** Carry every segment dir of `prevTable` into `newTable` without a
-    * rewrite (hard links locally — see [[SwapCommit.linkOrCopyRec]]). */
+    * rewrite (hard links locally — see [[Fs.linkOrCopyRec]]). */
   def carrySegs(prevTable: String, newTable: String): Unit =
     segValues(prevTable).foreach { sv =>
-      SwapCommit.linkOrCopyRec(
+      Fs.linkOrCopyRec(
         s"$prevTable/seg=$sv", s"$newTable/seg=$sv")
     }
 
@@ -198,12 +198,12 @@ object GenIndex {
 
   /** Empty-write guard for a segmented BUILD: if the freshly-written
     * seg dir holds no data, replace the whole table with a flat
-    * schema-bearing marker (readers then take the legacy path). */
+    * schema-bearing marker (readers then take the flat path). */
   def ensureSegReadable(
       spark: SparkSession, tableDir: String, segDir: String,
       schema: => StructType): Unit =
     if (!Fs.hasData(segDir, acceptDirs = true)) {
-      SwapCommit.deleteRec(tableDir)
+      Fs.deleteRec(tableDir)
       spark.createDataFrame(
         spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
         .write.parquet(tableDir)

@@ -1,20 +1,22 @@
 package graft.util
 
 /**
- * Generation-pointer commit — the object-store-safe alternative to
- * the in-place rename swap ([[SwapCommit]]): each build/refresh
- * writes a FRESH immutable generation directory `root/gen-<n>/` and
- * then flips a tiny `root/CURRENT` pointer file (tmp + rename — one
- * small-object op) to it. Readers resolve the pointer per query and
- * plan against an immutable dir, so:
+ * Generation-pointer commit — the one commit protocol of every
+ * persisted index and snapshot sink ([[graft.ext.VectorIndex]],
+ * [[graft.ext.DedupIndex]], [[graft.ext.TrainedQuality]],
+ * [[graft.ext.RagStore]], [[BucketedSwapIndex]],
+ * [[graft.targets.NodeTarget]], [[graft.targets.Scd2Target]]): each
+ * build/refresh/sync writes a FRESH immutable generation directory
+ * `root/gen-<n>/` and then flips a tiny `root/CURRENT` pointer file
+ * (tmp + rename — one small-object op) to it. Readers resolve the
+ * pointer per query and plan against an immutable dir, so:
  *
  *  - no rename of bulk data ever happens — on S3-like stores a
  *    commit is O(pointer), not O(index bytes);
  *  - a reader that resolved the OLD generation keeps a consistent
  *    view through a concurrent commit (its dir is immutable and is
  *    retained until the commit after next) — serving never blocks
- *    on, or fails across, a refresh, unlike the in-place swap whose
- *    pre-swap plans fail loudly ([[graft.ext.VectorIndex]] spec);
+ *    on, or fails across, a refresh;
  *  - crash anywhere is safe without a recovery step: an interrupted
  *    stage leaves an orphaned (never-referenced) generation that the
  *    next successful commit's cleanup removes; the pointer flip
@@ -31,7 +33,7 @@ package graft.util
  * exactly {new, previous}, so a reader may cache a resolved
  * generation dir across AT MOST ONE subsequent commit. A server that
  * pins a dir across two refreshes finds it deleted; re-resolve the
- * pointer per query (the [[graft.ext.VectorIndex.probeGen]]
+ * pointer per query (the [[graft.ext.VectorIndex.probe]]
  * discipline) or at least once per refresh interval.
  */
 object GenSwap {
@@ -145,23 +147,7 @@ object GenSwap {
       val name = st.getPath.getName
       if (ordinalOf(name).nonEmpty && name != genName &&
           !prev.contains(name))
-        SwapCommit.deleteRec(st.getPath)
+        Fs.deleteRec(st.getPath)
     }
   }
-
-  /** Migration sweep for roots that previously held a flat in-place
-    * layout (the pre-generation snapshot sinks): once a generation
-    * owns the state, every top-level entry that is neither a
-    * generation dir nor the pointer (old flat data files, a stale
-    * `_dstate`, committer markers) is deleted. Idempotent; call AFTER
-    * a successful [[commit]] — readers already prefer the pointer, so
-    * a crash before the sweep only leaves dead bytes the next sweep
-    * removes. */
-  def cleanupForeign(root: String): Unit =
-    Fs.list(root).foreach { st =>
-      val name = st.getPath.getName
-      if (ordinalOf(name).isEmpty && name != PointerName &&
-          name != PointerName + ".tmp")
-        SwapCommit.deleteRec(st.getPath)
-    }
 }

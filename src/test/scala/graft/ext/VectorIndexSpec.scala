@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF-PQ index: build/probe parity with brute force,
-  * ChangeSet-refresh equals rebuild-encode, manifest crash recovery,
-  * and degenerate inputs. */
+  * ChangeSet-refresh equals rebuild-encode, the generation commit
+  * (in-flight readers, crashed stages), and degenerate inputs. */
 class VectorIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -64,43 +64,18 @@ class VectorIndexSpec extends SparkSpec {
     assert(ids === finalCorpus.collect().map(_.getLong(0)).toSet)
   }
 
-  test("a crash between manifest write and swap completion is " +
-    "recovered idempotently by the next probe") {
-    val corpus = vecs(1L to 20L)
-    val parent = tmpDir("vidx")
-    val root = parent + "/idx"
-    VectorIndex.build(spark, corpus, root, nCells = 2, m = 4, k = 4)
-    val q = corpus.filter(col("vec_id") === 5)
-    val before = top(VectorIndex.probe(spark, root, q, 3, 2, 20))
-    // simulate the crash: stage a refreshed state fully, write the
-    // manifest, but die before the swap — by moving the committed
-    // state back out to staging and re-creating the manifest
-    val staging = root + ".staging"
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(root), java.nio.file.Paths.get(staging))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root + ".swap-manifest"), staging)
-    // next reader completes the swap and serves the staged state
-    val after = top(VectorIndex.probe(spark, root, q, 3, 2, 20))
-    assert(after === before)
-    assert(!new java.io.File(root + ".swap-manifest").exists())
-    assert(!new java.io.File(staging).exists())
-  }
-
-  test("probe across a refresh swap: post-swap probes serve the NEW " +
+  test("probe across a refresh: post-refresh probes serve the NEW " +
     "index (the model cache revalidates by file fingerprint); a " +
-    "probe plan captured BEFORE the swap never blends states — a " +
-    "delta refresh leaves it serving the complete OLD state (its " +
-    "segment files persist as hard links under the same names), a " +
-    "COMPACTION refresh fails it loudly (file set replaced)") {
+    "probe plan captured BEFORE the refresh never blends states — it " +
+    "keeps serving the complete OLD generation") {
     val corpus = vecs(1L to 30L)
     val root = tmpDir("vidx") + "/idx"
     VectorIndex.build(spark, corpus, root, nCells = 2, m = 4, k = 8)
     // one query vector; its exact twin will arrive in the refresh
     val q = corpus.filter(col("vec_id") === 7)
       .select(col("vec_id"), col("embedding"))
-    // warm the model cache + capture a pre-swap plan (NOT collected)
-    val preSwapPlan = VectorIndex.probe(spark, root, q, 3, 2, 30)
+    // warm the model cache + capture a pre-refresh plan (NOT collected)
+    val preRefreshPlan = VectorIndex.probe(spark, root, q, 3, 2, 30)
     val before = top(VectorIndex.probe(spark, root, q, 3, 2, 30))
     assert(before.nonEmpty)
     // DELTA refresh: add 107 = an exact twin of 7 (cosine 1.0 → must
@@ -108,7 +83,7 @@ class VectorIndexSpec extends SparkSpec {
     val twin = corpus.filter(col("vec_id") === 7)
       .select(lit(107L).as("vec_id"), col("embedding"))
     VectorIndex.refresh(spark, root, twin, Seq(8L).toDF("id"))
-    // a FRESH probe serves the post-swap state: the twin lands in
+    // a FRESH probe serves the post-refresh state: the twin lands in
     // the top-k at cosine ~1.0 (id 20 — vecs has period 13, so it is
     // ALSO an exact twin of 7 — outranks 107 by the id tie-break),
     // the dropped id is gone — old/new state never blends
@@ -118,79 +93,64 @@ class VectorIndexSpec extends SparkSpec {
     assert(after.forall { case (_, ni, sim, _) =>
       ni != 107L || sim > 0.999999 })
     assert(!after.exists(_._2 == 8L))
-    // the delta refresh carried the old segment's files as hard
-    // links under their original names, so the pre-swap plan keeps
-    // serving the COMPLETE pre-refresh answer — consistent-stale,
-    // never mixed (its file list IS the old segment set; new
-    // segments and tombstones cannot enter an already-planned scan)
-    assert(top(preSwapPlan) === before)
-    // a COMPACTION refresh rewrites the whole file set: a plan
-    // captured before it must now FAIL loudly, never mix
-    val preCompactPlan = VectorIndex.probe(spark, root, q, 3, 2, 30)
-    VectorIndex.refresh(spark, root, corpus.limit(0),
-      Seq(9L).toDF("id"), deltaCommit = false)
-    val e = intercept[Exception] { preCompactPlan.collect() }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: chain(t.getCause)
-    assert(chain(e).exists(c =>
-      c.isInstanceOf[java.io.FileNotFoundException] ||
-        String.valueOf(c.getMessage).contains("FileNotFound") ||
-        String.valueOf(c.getMessage).contains("does not exist")),
-      s"expected a missing-file failure, got: $e")
+    // the pre-refresh plan is bound to the previous generation, which
+    // the commit retains: it keeps serving the COMPLETE pre-refresh
+    // answer — consistent-stale, never mixed
+    assert(top(preRefreshPlan) === before)
   }
 
-  test("generation-pointer commit: buildGen+probeGen equals brute " +
+  test("generation-pointer commit: build+probe equals brute " +
     "force; a probe plan captured BEFORE a refresh KEEPS SERVING the " +
     "old generation through the commit (zero-downtime, the object-" +
     "store posture) while fresh probes see the new state; the " +
     "commit after next prunes the old generation") {
     val corpus = vecs(1L to 30L)
     val root = tmpDir("vidx") + "/gidx"
-    VectorIndex.buildGen(spark, corpus, root, nCells = 2, m = 4, k = 8)
+    VectorIndex.build(spark, corpus, root, nCells = 2, m = 4, k = 8)
     assert(graft.util.GenSwap.currentGen(root) === Some("gen-00000000"))
     val q = corpus.filter(col("vec_id") === 7)
     // parity with brute force at total coverage
-    val got = VectorIndex.probeGen(spark, root, q, 3, 2, shortlist = 30)
+    val got = VectorIndex.probe(spark, root, q, 3, 2, shortlist = 30)
     assert(top(got) === top(Similarity.bruteForceTopK(corpus, q, 3)))
     // capture an old-generation plan, then refresh (add twin 107,
     // drop 8) — the old plan must still COLLECT the old answer
-    val oldPlan = VectorIndex.probeGen(spark, root, q, 3, 2, 30)
+    val oldPlan = VectorIndex.probe(spark, root, q, 3, 2, 30)
     val oldAnswer = top(oldPlan)
     val twin = corpus.filter(col("vec_id") === 7)
       .select(lit(107L).as("vec_id"), col("embedding"))
-    VectorIndex.refreshGen(spark, root, twin, Seq(8L).toDF("id"))
+    VectorIndex.refresh(spark, root, twin, Seq(8L).toDF("id"))
     assert(graft.util.GenSwap.currentGen(root) === Some("gen-00000001"))
     assert(top(oldPlan) === oldAnswer) // old gen retained: no failure
-    val fresh = top(VectorIndex.probeGen(spark, root, q, 3, 2, 30))
+    val fresh = top(VectorIndex.probe(spark, root, q, 3, 2, 30))
     assert(fresh.exists { case (qi, ni, _, _) => qi == 7L && ni == 107L })
     assert(!fresh.exists(_._2 == 8L))
     // second refresh prunes gen-0 but keeps gen-1 for its readers
-    VectorIndex.refreshGen(spark, root,
+    VectorIndex.refresh(spark, root,
       corpus.limit(0), Seq(107L).toDF("id"))
     assert(graft.util.Fs.exists(s"$root/gen-00000001"))
     assert(!graft.util.Fs.exists(s"$root/gen-00000000"))
-    assert(!top(VectorIndex.probeGen(spark, root, q, 3, 2, 30))
+    assert(!top(VectorIndex.probe(spark, root, q, 3, 2, 30))
       .exists(_._2 == 107L))
   }
 
   test("generation-pointer commit: a crashed stage's orphan dir is " +
     "never served, is skipped by the next stage's ordinal, and is " +
-    "pruned by its commit; probeGen on an uncommitted root is empty") {
+    "pruned by its commit; probe on an uncommitted root is empty") {
     val corpus = vecs(1L to 20L)
     val root = tmpDir("vidx") + "/gidx"
     // no generation yet: probe degenerates to empty, not an error
-    assert(VectorIndex.probeGen(spark, root,
+    assert(VectorIndex.probe(spark, root,
       corpus.limit(3), 3, 2, 10).count() === 0L)
-    VectorIndex.buildGen(spark, corpus, root, nCells = 2, m = 4, k = 4)
+    VectorIndex.build(spark, corpus, root, nCells = 2, m = 4, k = 4)
     // simulate a crash mid-stage: a half-written gen-1 with no pointer
     graft.util.Fs.mkdirs(s"$root/gen-00000001")
     graft.util.Fs.touch(s"$root/gen-00000001/garbage")
     // readers still resolve gen-0 (the orphan is unreferenced)
     val q = corpus.filter(col("vec_id") === 5)
-    assert(top(VectorIndex.probeGen(spark, root, q, 3, 2, 20)).nonEmpty)
+    assert(top(VectorIndex.probe(spark, root, q, 3, 2, 20)).nonEmpty)
     // the next writer skips PAST the orphan (never reuses a
     // half-written dir) and its commit prunes it
-    VectorIndex.refreshGen(spark, root, corpus.limit(0),
+    VectorIndex.refresh(spark, root, corpus.limit(0),
       Seq(5L).toDF("id"))
     assert(graft.util.GenSwap.currentGen(root) === Some("gen-00000002"))
     assert(!graft.util.Fs.exists(s"$root/gen-00000001"))
@@ -204,7 +164,8 @@ class VectorIndexSpec extends SparkSpec {
     val root = tmpDir("vidx") + "/bidx"
     // 100 cells > the 64 fixed bucket dirs ⇒ buckets must share
     VectorIndex.build(spark, corpus, root, nCells = 100, m = 4, k = 8)
-    val dirs = graft.util.Fs.list(s"$root/corpus/seg=0")
+    val gen = graft.util.GenSwap.currentDir(root).get
+    val dirs = graft.util.Fs.list(s"$gen/corpus/seg=0")
       .filter(_.isDirectory).map(_.getPath.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("__cbucket=")))
     assert(dirs.size <= 64, s"expected <= 64 bucket dirs, got ${dirs.size}")
@@ -354,21 +315,21 @@ class VectorIndexSpec extends SparkSpec {
       nProbe = 4, shortlist = 40).count() === batch.count())
   }
 
-  test("delta (segment/tombstone) refreshGen: committed corpus " +
+  test("delta (segment/tombstone) refresh: committed corpus " +
     "equals the full rewrite's, previous segments carry as hard links") {
     val corpus = vecs(1L to 200L)
     val rootA = tmpDir("vidx") + "/delta"
     val rootB = tmpDir("vidx") + "/full"
-    VectorIndex.buildGen(spark, corpus, rootA, nCells = 8, m = 4, k = 8)
-    VectorIndex.buildGen(spark, corpus, rootB, nCells = 8, m = 4, k = 8)
+    VectorIndex.build(spark, corpus, rootA, nCells = 8, m = 4, k = 8)
+    VectorIndex.build(spark, corpus, rootB, nCells = 8, m = 4, k = 8)
     val changed = vecs(201L to 202L)
     val dropped = Seq(5L).toDF("id")
-    VectorIndex.refreshGen(spark, rootA, changed, dropped)
-    VectorIndex.refreshGen(spark, rootB, changed, dropped,
+    VectorIndex.refresh(spark, rootA, changed, dropped)
+    VectorIndex.refresh(spark, rootB, changed, dropped,
       deltaCommit = false)
     def cur(root: String) = graft.util.GenSwap.currentDir(root).get
     def corpusRows(root: String) =
-      VectorIndex.corpusTable(spark, cur(root))
+      VectorIndex.corpusTable(spark, root)
         .select($"id", $"cell".cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(corpusRows(rootA) === corpusRows(rootB))
@@ -376,9 +337,9 @@ class VectorIndexSpec extends SparkSpec {
     assert(corpusRows(rootA).exists(_._1 == 201L))
     // probes agree bit-for-bit
     val q = corpus.filter(col("vec_id") % 50 === 1)
-    assert(top(VectorIndex.probeGen(spark, rootA, q, 3, nProbe = 8,
+    assert(top(VectorIndex.probe(spark, rootA, q, 3, nProbe = 8,
         shortlist = 200))
-      === top(VectorIndex.probeGen(spark, rootB, q, 3, nProbe = 8,
+      === top(VectorIndex.probe(spark, rootB, q, 3, nProbe = 8,
         shortlist = 200)))
     // carried segments are hard links; the delta segment is fresh
     import scala.jdk.CollectionConverters._

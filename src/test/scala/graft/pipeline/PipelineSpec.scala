@@ -73,7 +73,8 @@ class PipelineSpec extends SparkSpec {
     assert((r4.added, r4.updated, r4.removed) === ((0L, 3L, 0L)))
   }
 
-  test("skip guards throw before any write (ImportService.php:77-82)") {
+  test("a skip-flag sync writes nothing for the skipped branch " +
+      "(ImportService.php:77-82)") {
     val dir = tmpDir("pipeline-skip")
     val source = InlineSource(s => {
       import s.implicits._
@@ -83,9 +84,10 @@ class PipelineSpec extends SparkSpec {
     val preset = Preset(source, target, Mapper(Seq("id" -> "id")),
       idAttribute = "id", versionAttribute = Some("version"),
       skipAddedRecords = true)
-    // diff zeroes the added branch ⇒ no exception, no writes
+    // the diff zeroes the added branch ⇒ the new record is not written
     val r = new ImportService(preset).importData(spark)
     assert(r.added === 0)
+    assert(target.currentState(spark).count() === 0L)
   }
 
   test("prune refuses to run with skip flags (ImportService.php:96-100)") {
@@ -272,7 +274,7 @@ class PipelineSpec extends SparkSpec {
     Seq(("a", 1L, "OLD")).toDF("id", "version", "name")
       .repartition(2).write.parquet(live)
     // a crashed sync: staged next-state + manifest written, swap never
-    // replayed (the window SwapCommitSpec's crash tests reconstruct)
+    // replayed (FileTarget's manifest-swap crash window)
     val staging = s"$live.staging"
     Seq(("a", 2L, "NEW"), ("b", 1L, "NEW"))
       .toDF("id", "version", "name").repartition(2).write.parquet(staging)

@@ -12,13 +12,28 @@ class NodeTargetSpec extends SparkSpec {
 
   /** Read surface for the generation-layout state: the committed
     * node table / `_dstate` index of `$dir/nodes`, resolved through
-    * the CURRENT pointer (or the legacy flat dir). */
+    * the CURRENT pointer. */
   private def nodesOf(dir: String) =
     NodeTarget(s"$dir/nodes").table(spark)
   private def stateDirOf(dir: String): String =
     NodeTarget(s"$dir/nodes").stateDirResolved.get
   private def idxOf(dir: String) =
     spark.read.parquet(stateDirOf(dir) + "/_dstate")
+
+  /** Seed `$dir/nodes` with a committed generation holding `table`
+    * and its `_dstate` index (one row per identifier) — state as an
+    * earlier pipeline left it. */
+  private def seedState(
+      dir: String, table: org.apache.spark.sql.DataFrame): Unit = {
+    val root = s"$dir/nodes"
+    val gen = graft.util.GenSwap.nextDir(root)
+    table.write.parquet(gen)
+    table.groupBy($"identifier".as("id"))
+      .agg(max($"version").as("version"),
+        min($"hidden".cast("int")).cast("boolean").as("hidden"))
+      .write.parquet(s"$gen/_dstate")
+    graft.util.GenSwap.commit(root, gen)
+  }
 
   private def preset(dir: String, data: Seq[(String, Long, String)],
       softDelete: Boolean = false) = {
@@ -182,9 +197,8 @@ class NodeTargetSpec extends SparkSpec {
   }
 
   test("keyed diff-state index: _dstate is written inside the state " +
-      "dir (invisible to the table read), tracks the diff state " +
-      "across syncs and removeAll, and a pre-index legacy dir falls " +
-      "back to the aggregation then gains the index on first commit") {
+      "dir (invisible to the table read) and tracks the diff state " +
+      "across syncs and removeAll") {
     val dir = tmpDir("node-dstate")
     // sync 1: a, b
     new ImportService(preset(dir,
@@ -219,69 +233,6 @@ class NodeTargetSpec extends SparkSpec {
       .as[(String, Long, Boolean)].collect().toSet
     assert(idx3 === Set(
       ("node-a", 2L, true), ("node-b", 1L, true), ("node-c", 1L, true)))
-
-    // legacy dir (no _dstate): the fallback aggregation must serve
-    // the diff, and the next commit must create the index
-    graft.util.SwapCommit.deleteRec(
-      new java.io.File(stateDirOf(dir) + "/_dstate"))
-    val tgt = NodeTarget(s"$dir/nodes", idPrefix = "node-",
-      softDelete = true,
-      variantsResolver = _ => array(lit("de"), lit("en")))
-    val legacyState = tgt.currentState(spark)
-      .as[(String, Long, Boolean)].collect().toSet
-    assert(legacyState === Set(
-      ("node-a", 2L, true), ("node-b", 1L, true), ("node-c", 1L, true)))
-    new ImportService(preset(dir,
-      Seq(("a", 3L, "Ada3")), softDelete = true)).importData(spark)
-    val idx4 = idxOf(dir)
-      .as[(String, Long, Boolean)].collect().toSet
-    // a's update un-hides it; b and c keep their hidden state
-    assert(idx4 === Set(
-      ("node-a", 3L, false), ("node-b", 1L, true), ("node-c", 1L, true)))
-  }
-
-  test("LEGACY in-place layout: a pre-generation writer's pending swap " +
-      "(manifest + staging) is completed idempotently before the next " +
-      "read — the staged state is never lost, both crash windows") {
-    val dir = tmpDir("node-crash")
-    val live = s"$dir/nodes"
-    // a pre-generation state dir: flat parquet, no pointer
-    Seq(("node-a", "de", "/sites/a", false, 1L, "ADA"))
-      .toDF("identifier", "variant", "path", "hidden", "version", "name")
-      .write.parquet(live)
-    // simulate a legacy writer's crash: stage the next state fully,
-    // write the manifest, but die before the rm+rename
-    val staging = s"$live.staging"
-    val manifest = new java.io.File(s"$live.swap-manifest")
-    spark.read.parquet(live)
-      .withColumn("name", lit("CRASHED")).write.parquet(staging)
-    spark.read.parquet(live).select("name") // live still old
-    java.nio.file.Files.writeString(manifest.toPath, staging)
-    // next NodeTarget read recovers the swap before reading
-    val st = NodeTarget(live, idPrefix = "node-").currentState(spark)
-    st.collect() // forces the read through recover()
-    assert(!manifest.exists(), "manifest must be consumed")
-    assert(!new java.io.File(staging).exists, "staging must be swapped in")
-    val names = NodeTarget(live).table(spark)
-      .select("name").as[String].collect().toSet
-    assert(names === Set("CRASHED"))
-
-    // the WORST window: crashed after deleting the live dir, before
-    // renaming staging in — a naive existence check would read this
-    // as "no state"; removeAll must recover first, then prune
-    val staging2 = s"$live.staging"
-    spark.read.parquet(live).write.parquet(staging2)
-    graft.util.SwapCommit.deleteRec(new java.io.File(live))
-    java.nio.file.Files.writeString(manifest.toPath, staging2)
-    val n = NodeTarget(live, idPrefix = "node-", softDelete = true)
-      .removeAll(spark)
-    assert(n === 1L, "removeAll must see the recovered state")
-    assert(!manifest.exists())
-    // the soft removeAll COMMITTED: the state now lives under a
-    // generation and the legacy flat files are swept
-    assert(NodeTarget(live).stateDirResolved.get.contains("gen-"))
-    assert(NodeTarget(live).table(spark)
-      .filter($"hidden").count() === 1L)
   }
 
   test("generation commit: a reader holding the PREVIOUS generation " +
@@ -293,7 +244,8 @@ class NodeTargetSpec extends SparkSpec {
     val gen1 = stateDirOf(dir)
     assert(gen1.contains("gen-"))
     // a long-lived reader plans against the resolved dir (the
-    // probeGen discipline: resolve per query, plan against immutable)
+    // VectorIndex.probe discipline: resolve per query, plan against
+    // the immutable generation)
     val oldReader = spark.read.parquet(gen1).select("identifier", "name")
     // sync 2 commits a new generation while the reader is in flight
     new ImportService(preset(dir, Seq(("a", 2L, "Ada2"))))
@@ -319,9 +271,8 @@ class NodeTargetSpec extends SparkSpec {
     val dir = tmpDir("node-unpref")
     // a state dir written by some earlier, prefix-less pipeline: the
     // diff's strip is conditional, so this id passes through raw
-    Seq(("legacy", "", "/sites/legacy", false, 1L, "LEG"))
-      .toDF("identifier", "variant", "path", "hidden", "version", "name")
-      .write.parquet(s"$dir/nodes")
+    seedState(dir, Seq(("legacy", "", "/sites/legacy", false, 1L, "LEG"))
+      .toDF("identifier", "variant", "path", "hidden", "version", "name"))
     // sync 1: source still carries "legacy" (same version → unchanged)
     // plus a new record
     val r1 = new ImportService(preset(dir,
@@ -357,9 +308,8 @@ class NodeTargetSpec extends SparkSpec {
       "— no stranded duplicates — and the index tracks the new " +
       "prefixed identifier (r15 verdict, update twin)") {
     val dir = tmpDir("node-unpref-upd")
-    Seq(("legacy", "", "/sites/legacy", false, 1L, "LEG"))
-      .toDF("identifier", "variant", "path", "hidden", "version", "name")
-      .write.parquet(s"$dir/nodes")
+    seedState(dir, Seq(("legacy", "", "/sites/legacy", false, 1L, "LEG"))
+      .toDF("identifier", "variant", "path", "hidden", "version", "name"))
     val r = new ImportService(preset(dir, Seq(("legacy", 5L, "Leg2"))))
       .importData(spark)
     assert(r.updated === 1)
@@ -388,12 +338,11 @@ class NodeTargetSpec extends SparkSpec {
   test("a legacy UNPREFIXED id hard-removed actually drops its rows " +
       "(r15 verdict, hard-delete twin)") {
     val dir = tmpDir("node-unpref-rm")
-    Seq(
+    seedState(dir, Seq(
       ("legacy", "", "/sites/legacy", false, 1L, "LEG"),
       ("node-a", "de", "/sites/a", false, 1L, "ADA"),
       ("node-a", "en", "/sites/a", false, 1L, "ADA"))
-      .toDF("identifier", "variant", "path", "hidden", "version", "name")
-      .write.parquet(s"$dir/nodes")
+      .toDF("identifier", "variant", "path", "hidden", "version", "name"))
     val r = new ImportService(preset(dir, Seq(("a", 1L, "Ada"))))
       .importData(spark)
     assert(r.removed === 1)

@@ -200,27 +200,28 @@ class Scd2TargetSpec extends SparkSpec {
     assert(graft.util.Fs.exists(gen2))
   }
 
-  test("LEGACY crash recovery: a pending swap manifest is completed " +
-      "before any read — the staged next-state is never lost mid-swap") {
+  test("crash recovery: a generation staged but never flipped leaves " +
+      "history reading the previous generation, and the next commit " +
+      "removes the orphan") {
     val dir = tmpDir("scd2-crash")
     new ImportService(preset(dir, Seq(("a", 1L, "a0")))).importData(spark)
     val t = Scd2Target(s"$dir/hist")
-    // simulate a writer that fully staged its next-state, recorded
-    // the manifest, removed the live dir, and DIED before the rename
-    val staging = new java.io.File(s"$dir/hist/data.staging")
-    t.history(spark).withColumn("attr", lit("staged"))
-      .write.mode("overwrite").parquet(staging.toString)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/hist/data.swap-manifest"),
-      staging.toString)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(new java.io.File(s"$dir/hist/data"))
-    val h = t.history(spark).select($"attr").as[String].collect().toSet
-    assert(h === Set("staged"))
-    assert(!new java.io.File(s"$dir/hist/data.swap-manifest").exists())
-    assert(!staging.exists())
+    val committed = t.dataDirResolved.get
+    // simulate a writer that fully staged its next generation and
+    // DIED before the pointer flip
+    val orphan = graft.util.GenSwap.nextDir(s"$dir/hist/data")
+    t.history(spark).withColumn("attr", lit("staged")).write.parquet(orphan)
+    assert(t.dataDirResolved.get === committed)
+    assert(t.history(spark).select($"attr").as[String].collect().toSet
+      === Set("a0"))
+    // the next sync stages PAST the orphan and its commit prunes it;
+    // the previous generation stays for in-flight readers
+    new ImportService(preset(dir, Seq(("a", 2L, "a1")))).importData(spark)
+    assert(t.dataDirResolved.get.endsWith("gen-00000002"))
+    assert(!graft.util.Fs.exists(orphan))
+    assert(graft.util.Fs.exists(committed))
+    assert(t.currentState(spark).select($"attr").as[String].collect().toSet
+      === Set("a1"))
   }
 
   test("removeAll soft-closes every current row; history survives; " +

@@ -1,36 +1,12 @@
 package graft.util
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The bucket-partitioned index layout under the generation-pointer
-  * commit: legacy (pre-generation) roots read transparently and
-  * migrate on the next commit; orphaned gen dirs are not mistaken
-  * for legacy data; in-flight readers survive a refresh. */
+  * commit: orphaned gen dirs are never served; segment/tombstone
+  * refreshes equal a rebuild; in-flight readers survive a refresh. */
 class BucketedSwapIndexSpec extends SparkSpec {
   import spark.implicits._
-
-  test("legacy bucket-partitioned root: reads as-is, migrates on the " +
-      "next commit (gen dir + pointer, legacy dirs swept)") {
-    val root = tmpDir("bsi-legacy") + "/idx"
-    // a pre-generation index: bucket= partition dirs directly at root
-    Seq((1L, 10L), (2L, 11L)).toDF("fp", "payload")
-      .withColumn("bucket", pmod($"fp", lit(4)))
-      .write.partitionBy("bucket").parquet(root)
-    assert(BucketedSwapIndex.resolve(root) === Some(root))
-    assert(BucketedSwapIndex.read(spark, root).count() === 2L)
-    // first commit migrates
-    BucketedSwapIndex.stageAndSwap(root,
-      Seq((3L, 30L), (4L, 31L)).toDF("fp", "payload"), $"fp", 4)
-    val resolved = BucketedSwapIndex.resolve(root).get
-    assert(resolved.contains("gen-"))
-    assert(BucketedSwapIndex.read(spark, root)
-      .select($"fp").as[Long].collect().toSet === Set(3L, 4L))
-    // the legacy bucket= dirs are gone; only gen dirs + pointer remain
-    val leftover = Fs.list(root).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("gen-") || n.startsWith("CURRENT"))
-    assert(leftover.isEmpty, s"legacy files not swept: $leftover")
-  }
 
   test("an orphaned gen dir (crashed first stage) is NOT legacy data: " +
       "the root is unbuilt; a later commit supersedes the orphan") {
