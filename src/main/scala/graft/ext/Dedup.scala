@@ -46,42 +46,13 @@ object Dedup {
    * verification kernel relies on; set semantics downstream are
    * order-independent).
    *
-   * History of this hot spot: `transform(i => slice(toks, i, n))`
-   * measured ~2.4 ms/doc interpreted; the zip_with-shifted-slices
-   * HOF form cut that ~10×; the r18 fused kernel
-   * ([[graft.functions.WordShingles]]) removes the remaining
-   * ~2·|tokens| interpreted lambda dispatches + two boxed array
-   * passes per row and stays inside whole-stage codegen.
+   * This zip_with-shifted-slices form is ~10× faster than a
+   * `transform(i => slice(toks, i, n))` one. A fused codegen kernel
+   * won the shingle pass in isolation but lost at query level
+   * (OPTIMIZATION_r18.md item 7) and on the `dedup_index` benchmark
+   * (`read_s` 6.33 vs 5.36 s, medians of 6 pairs on 4 cores).
    */
-  def shingles(text: Column, n: Int = 3): Column =
-    // native fused kernel (r18): the zip_with/array_distinct/
-    // array_sort HOF formulation this replaces dispatched ~2·|tokens|
-    // interpreted lambda evals per row plus two boxed array passes —
-    // on the hottest text-ingest path in the engine (every minhash
-    // build/refresh/probe shingles its input). Bit-equality with the
-    // HOF form (kept as the reference formulation in FunctionsSpec)
-    // is spec-pinned; the result stays SORTED (binary order) and
-    // distinct — the contract `sorted_intersect_size` relies on.
-    // DEFAULT remains the HOF form — a measured, unresolved
-    // contradiction (r18): in ISOLATION the kernel wins clearly
-    // (ShingleAB, min-of-5, noop sink: shingle→explode 0.96 → 0.50 s,
-    // full minhash signatures 1.95 → 1.34 s at sf0.1), but the
-    // dedup QUERIES read consistently ~1.3-1.5× SLOWER with the
-    // kernel in two independent A/Bs (interleaved before/after-tree
-    // ABAB and a same-tree env-switch pair) on a host whose control
-    // rows swing ±1.5× — not yet explained, so the bench-anchored
-    // default stays the historical form and the kernel ships behind
-    // `GRAFT_SHINGLE_KERNEL=1` (bit-equal, FunctionsSpec-pinned)
-    // for the next round to resolve on a quieter host.
-    if (sys.env.get("GRAFT_SHINGLE_KERNEL").contains("1"))
-      graft.functions.GraftFunctions.word_shingles(
-        TextAnalysis.normTokens(text), n)
-    else
-      shinglesHof(text, n)
-
-  /** The HOF reference formulation (pre-r18 production form) — kept
-    * callable for the kernel escape hatch and the A/B harness. */
-  private[graft] def shinglesHof(text: Column, n: Int): Column = {
+  def shingles(text: Column, n: Int = 3): Column = {
     val tokens = TextAnalysis.normTokens(text)
     val nTok = size(tokens)
     val grams = (2 to n).foldLeft(tokens) { (acc, k) =>

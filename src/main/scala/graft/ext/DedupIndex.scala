@@ -41,7 +41,8 @@ import org.apache.spark.sql.functions._
  * forward as hard links ([[graft.util.Fs.linkOrCopyRec]]:
  * zero new bytes on local stores; per-object copy elsewhere). Dir-
  * level partial rewrites were measured NOT to help here
- * (RefreshScale: a ~1% delta hash-touches all 64 bounded dirs), so
+ * (BASELINE.md "Round-18: delta-proportional refresh COMMITS": a
+ * ~1% delta hash-touches all 64 bounded dirs), so
  * the segment/tombstone layout is the mechanism; segment count is
  * bounded by [[graft.util.GenIndex.MaxSegments]], past which the
  * refresh COMPACTS (one full rewrite per MaxSegments refreshes —
@@ -157,8 +158,8 @@ object DedupIndex {
     * [[graft.util.GenIndex.MaxSegments]] live segments the refresh
     * COMPACTS (full rewrite into a fresh seg=0, ledger cleared).
     * `deltaCommit = false` forces the compaction path every time —
-    * the A/B hook for the write-volume instrumentation
-    * ([[graft.tools.RefreshScale]]). Degenerate
+    * the full-rewrite reference that DedupIndexSpec's delta test
+    * compares the segmented commit against. Degenerate
     * (empty-marker) layouts fall back to the full rewrite
     * automatically. */
   def refresh(

@@ -40,31 +40,16 @@ import org.apache.spark.sql.functions._
  * (doc_id, stage ∈ {kept, updated, deleted, dup_text, dup_embed,
  * ingested}, version, len_chars, margin, n_dup_post, sim_post).
  *
- * `pinned = true` is the CERTIFICATION shape (fixed 8 cells, total
- * probe coverage, corpus-sized shortlists — the vector gates are then
- * PROVABLY brute-force-equal, so a DuckDB oracle replays the whole
- * day exactly); `pinned = false` is the PRODUCTION shape
- * (occupancy-sized cells via [[VectorIndex.buildAuto]], nProbe 8,
- * bounded shortlist) — the shape [[graft.tools.IngestDayScale]]
- * smokes at 100x key-growth, where total coverage would be
- * O(|batch|·n).
+ * The vector gates use fixed 8-cell indexes, full probe coverage and
+ * corpus-sized shortlists, so they are provably brute-force-equal and
+ * a DuckDB oracle replays the whole day exactly.
  */
 object IngestDay {
 
   def run(
       spark: SparkSession, docs: DataFrame, embeddings: DataFrame,
-      workDir: String, pinned: Boolean = true): DataFrame = {
+      workDir: String): DataFrame = {
     val s = spark
-    // opt-in phase walls to stderr (`GRAFT_INGEST_PROF=1`) — the
-    // §1 "measure first" surface for this composed row; zero cost
-    // and zero behavior when unset
-    val profT0 = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    def mark(phase: String): Unit =
-      if (sys.env.contains("GRAFT_INGEST_PROF")) {
-        val now = System.nanoTime()
-        val dt = (now - profT0.getAndSet(now)) / 1e9
-        Console.err.println(f"[ingest-day] $phase%-18s $dt%7.2fs")
-      }
     val hash = TextAnalysis.portableHash60 _
     val d = docs.select(col("doc_id"), col("text"))
     val e = embeddings.select(col("vec_id"), col("embedding"))
@@ -86,20 +71,12 @@ object IngestDay {
     graft.util.GenIndex.writeAll(
       () => DedupIndex.build(s, evens, didx, k = 32, bands = 8, n = 3,
         idCol = "doc_id", textCol = "text", baseHash = hash),
-      () =>
-        if (pinned)
-          VectorIndex.build(s, evenVecs, vidx, nCells = 8, m = 16, k = 32)
-        else
-          VectorIndex.buildAuto(s, evenVecs, vidx, targetPerCell = 256,
-            m = 16, k = 32),
+      () => VectorIndex.build(s, evenVecs, vidx, nCells = 8, m = 16, k = 32),
       () => TrainedQuality.buildModel(s, evens, qm),
       () => target.writeState(s, evens.select(
         col("doc_id").cast("string").as("id"), lit(1L).as("version"),
         length(col("text")).cast("long").as("len_chars"))))
     val corpusN = evenVecs.count().toInt
-    mark("builds")
-    def gateShortlist(n: Int): Int =
-      if (pinned) math.max(n, 1) else math.min(math.max(n, 1), 400)
 
     // ── 2.–4. today's arrivals through both gates ──
     val odds = d.filter(col("doc_id") % 2 === 1)
@@ -114,14 +91,13 @@ object IngestDay {
         textSurv.select(col("doc_id").as("vec_id")), Seq("vec_id"),
         "left_semi")
       val survivors = VectorIndex.dedupIngest(s, vidx, batchVec,
-        threshold = 0.4, nProbe = 8, shortlist = gateShortlist(corpusN))
+        threshold = 0.4, nProbe = 8, shortlist = math.max(corpusN, 1))
       batchVec.select(col("vec_id"))
         .join(survivors.select(col("vec_id")), Seq("vec_id"),
           "left_anti")
         .select(col("vec_id").as("doc_id"))
         .persist()
     }
-    mark("gates")
     try {
       val ingested = odds.join(dupText, Seq("doc_id"), "left_anti")
         .join(dupEmbed, Seq("doc_id"), "left_anti")
@@ -176,7 +152,6 @@ object IngestDay {
           deleted.select(col("doc_id").as("id"))),
         () => TrainedQuality.refreshModel(s, qm, changedText,
           droppedTextIds))
-      mark("sync+refreshes")
       // an all-empty sync never materializes the partitioned state, so
       // the snapshot may come back with the minimal (id, version)
       // schema — project the declared columns stably either way (the
@@ -213,7 +188,7 @@ object IngestDay {
       val simPost = VectorIndex.probe(s, vidx,
         e.join(dupEmbed.select(col("doc_id").as("vec_id")),
           Seq("vec_id"), "left_semi"),
-        k = 1, nProbe = 8, shortlist = gateShortlist(finalN))
+        k = 1, nProbe = 8, shortlist = math.max(finalN, 1))
         .select(col("q_id").as("doc_id"), col("sim").as("sim_post"))
 
       // ── the ledger: one row per document ──
@@ -242,7 +217,6 @@ object IngestDay {
           col("sim_post"))
         .localCheckpoint() // materialize before releasing the caches
     } finally {
-      mark("readback")
       dupText.unpersist(); dupEmbed.unpersist(); ()
     }
   }

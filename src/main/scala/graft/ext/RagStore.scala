@@ -31,7 +31,8 @@ import org.apache.spark.sql.functions._
  *
  * Both tables append in lockstep (same segment ordinal per refresh)
  * and COMPACT together past [[graft.util.GenIndex.MaxSegments]];
- * `deltaCommit = false` forces the compaction path (the A/B hook).
+ * `deltaCommit = false` forces the compaction path — the full-rewrite
+ * reference that RagStoreSpec compares the segmented commit against.
  */
 object RagStore {
 

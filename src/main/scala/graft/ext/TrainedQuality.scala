@@ -346,8 +346,10 @@ object TrainedQuality {
     * dropped ids' `__fbucket` dirs (a pure function of id —
     * partition-pruned scan per segment). Past
     * [[graft.util.GenIndex.MaxSegments]] segments the refresh
-    * COMPACTS; `deltaCommit = false` forces the compaction path (the
-    * A/B hook); the degenerate empty marker falls back automatically. */
+    * COMPACTS; `deltaCommit = false` forces the compaction path — the
+    * full-rewrite reference that TrainedQualitySpec's delta test
+    * compares the segmented commit against; the degenerate empty
+    * marker falls back automatically. */
   def refreshModel(
       spark: org.apache.spark.sql.SparkSession, root: String,
       changedDocs: DataFrame, droppedIds: DataFrame,

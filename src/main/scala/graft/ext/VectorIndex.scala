@@ -120,8 +120,9 @@ object VectorIndex {
     * forward. Past [[graft.util.GenIndex.MaxSegments]] segments the
     * refresh COMPACTS — a full rewrite of the live state into a
     * fresh seg=0 with the ledger cleared. `deltaCommit = false`
-    * forces the compaction path (the [[graft.tools.RefreshScale]]
-    * A/B hook); the degenerate empty-corpus marker falls back
+    * forces the compaction path — the full-rewrite reference that
+    * VectorIndexSpec's delta test compares the segmented commit
+    * against; the degenerate empty-corpus marker falls back
     * automatically. */
   private def stageRefreshedCorpus(
       spark: SparkSession, dir: String, prevRoot: String,

@@ -994,110 +994,6 @@ case class PqAdcScore(
  *    `spark.sql.extensions=graft.functions.GraftExtensions` at
  *    session build (the SparkSessionExtensions route).
  */
-/**
- * `word_shingles(tokens, n)` — the sorted distinct word n-gram set of
- * a token array, fused into one codegen'd loop. Replaces the
- * interpreted HOF pipeline `array_sort(array_distinct(when(size < n,
- * array(concat_ws(" ", tokens))).otherwise(slice(foldLeft(2..n)(
- * zip_with(acc, slice(tokens, k, ...), concat(a, " ", b))), 1,
- * size - n + 1))))` — per row that formulation dispatches
- * ~2·|tokens| boxed lambda evals plus two more interpreted array
- * passes, and it sits on the hottest text-ingest path in the engine
- * (every minhash build/refresh/probe shingles its input). Semantics
- * are pinned bit-for-bit against the HOF form (FunctionsSpec):
- *  - `tokens` null → null (standard null-safe eval);
- *  - |tokens| < n → ONE shingle: all tokens joined by " " with null
- *    elements SKIPPED (the concat_ws contract);
- *  - otherwise: the |tokens|−n+1 window joins, each null iff its
- *    window contains a null token (the concat contract), then
- *    distinct + ascending binary-UTF8 sort with a null (if any)
- *    LAST (the array_distinct/array_sort contract).
- */
-case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    // n is validated here (not only at construction) so a bad SQL call
-    // fails at ANALYSIS time with a clear message instead of a
-    // per-row NegativeArraySizeException on the executors
-    case _ if n < 1 => TypeCheckResult.TypeCheckFailure(
-      s"word_shingles requires n >= 1, got $n")
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"word_shingles requires an array<string> argument, got ${t.simpleString}")
-  }
-
-  @transient private lazy val sep = UTF8String.fromString(" ")
-
-  /** Public — invoked from generated code via a reference object. */
-  def shingle(tokens: ArrayData): ArrayData = {
-    val nTok = tokens.numElements()
-    if (nTok < n) {
-      // concat_ws(" ", tokens): null elements skipped, empty → ""
-      val parts = new Array[UTF8String](nTok)
-      var i = 0
-      while (i < nTok) {
-        parts(i) = if (tokens.isNullAt(i)) null else tokens.getUTF8String(i)
-        i += 1
-      }
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array[Any](UTF8String.concatWs(sep, parts: _*)))
-    }
-    val m = nTok - n + 1
-    val grams = new Array[UTF8String](m)
-    var cnt = 0
-    var hasNull = false
-    val parts = new Array[UTF8String](2 * n - 1)
-    var s = 0
-    while (s < m) {
-      var nullGram = false
-      var j = 0
-      while (j < n && !nullGram) {
-        if (tokens.isNullAt(s + j)) nullGram = true
-        else {
-          if (j > 0) parts(2 * j - 1) = sep
-          parts(2 * j) = tokens.getUTF8String(s + j)
-        }
-        j += 1
-      }
-      if (nullGram) hasNull = true
-      else { grams(cnt) = UTF8String.concat(parts: _*); cnt += 1 }
-      s += 1
-    }
-    // ascending binary-UTF8 sort (UTF8String.compareTo — the engine's
-    // string ordering), then adjacent dedup; at most one null, LAST
-    java.util.Arrays.sort(grams, 0, cnt,
-      new java.util.Comparator[UTF8String] {
-        override def compare(a: UTF8String, b: UTF8String): Int =
-          a.compareTo(b)
-      })
-    val out = new java.util.ArrayList[Any](cnt + 1)
-    var k = 0
-    while (k < cnt) {
-      if (k == 0 || grams(k).compareTo(grams(k - 1)) != 0)
-        out.add(grams(k))
-      k += 1
-    }
-    if (hasNull) out.add(null)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    shingle(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordShinglesExpr", this,
-      classOf[WordShingles].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.shingle($a);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
 object GraftFunctions {
   private def litInt(e: Expression, fn: String, arg: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
@@ -1154,8 +1050,6 @@ object GraftFunctions {
       litFloatMatrix(es(1), "centroid_probe", "centroids"),
       litInt(es(2), "centroid_probe", "nProbe"))),
     "vec_normalize" -> (es => VecNormalize(es.head)),
-    "word_shingles" -> (es => WordShingles(es.head,
-      litInt(es(1), "word_shingles", "n"))),
     "pq_codes" -> (es => PqCodes(es.head,
       litFloatCube(es(1), "pq_codes", "codebooks"))),
     "pq_adc_score" -> (es => PqAdcScore(es.head, es(1),
@@ -1218,9 +1112,6 @@ object GraftFunctions {
     * probed via `mightContainLong`. */
   def vec_normalize(v: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_normalize", v)
-  def word_shingles(tokens: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("word_shingles", tokens,
-      org.apache.spark.sql.functions.lit(n))
   def bloom_might_contain(bloom: Column, value: Column): Column =
     org.apache.spark.sql.functions.call_function(
       "bloom_might_contain", bloom, value)

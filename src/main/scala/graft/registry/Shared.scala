@@ -288,11 +288,12 @@ private[graft] object Shared {
   /** DuckDB replication of the full TextAnalysis projection —
     * shared by q_text_analysis and the corpus-cleanup composition. */
   /** Exhaustive cosine top-5 per query point — the shared oracle for
-    * ALL FOUR ANN variants: each query's settings are pinned (by
-    * RecallProbe + ExtSpec) to exact agreement with the brute-force
-    * answer on the gate corpus, so DuckDB certifies the ANN output by
-    * recomputing the search exhaustively. Rank ordering replays the
-    * engine's total order (sim desc, n_id asc) on the UNROUNDED sim;
+    * ALL FOUR ANN variants: each query's settings are pinned (by the
+    * oracle gate itself + ExtSpec) to exact agreement with the
+    * brute-force answer on the gate corpus, so DuckDB certifies the
+    * ANN output by recomputing the search exhaustively. Rank
+    * ordering replays the engine's total order (sim desc, n_id asc)
+    * on the UNROUNDED sim;
     * `list_dot_product` is bit-identical to the native cosine kernel
     * (both are plain sequential folds — proven by q_embed_cosine). */
   lazy val duckAnnBruteTop5: String =

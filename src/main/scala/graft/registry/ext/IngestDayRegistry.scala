@@ -20,14 +20,12 @@ private[graft] object IngestDayRegistry {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // certification shape (pinned cells, total probe coverage,
     // corpus-sized shortlists ⇒ the vector gates are PROVABLY
-    // brute-force-equal); the production shape (buildAuto +
-    // bounded shortlist) is what graft.tools.IngestDayScale smokes
-    // at 100x key-growth
+    // brute-force-equal)
     "q_ingest_day" -> ((s, dir) =>
       graft.ext.IngestDay.run(s,
         s.read.parquet(t(dir, "documents")),
         s.read.parquet(t(dir, "embeddings")),
-        tempStateDir() + "/ingestday", pinned = true))
+        tempStateDir() + "/ingestday"))
   )
 
   /** Rel-id offset for "the same document with its day-2 text": the

@@ -72,7 +72,7 @@ private[graft] object SamplingRegistry {
     // end-to-end, so the distributed power iteration is exactly
     // oracle-replayable (double sums are order-dependent; longs
     // aren't). pageRank returns a persisted (caller-owned) frame;
-    // the Verify/Bench/TimeQ harnesses release it via their
+    // the Verify/Bench/Prof harnesses release it via their
     // per-query clearCache.
     "q_pagerank" -> ((s, dir) => {
       val o = tbl(s, dir, "orders")

@@ -132,9 +132,9 @@ private[graft] object SimilarityRegistry {
 
     // LSH-bucketed ANN top-k — oracle-checked: probeRadius=3 is
     // pinned to EXACT agreement with the exhaustive top-5 on this
-    // corpus (RecallProbe), so the DuckDB oracle recomputes the
-    // brute-force answer; sub-exhaustive production probing
-    // (radius 1-2) is recall-pinned by ExtSpec
+    // corpus (the oracle gate fails on any miss), so DuckDB
+    // recomputes the brute-force answer; sub-exhaustive production
+    // probing (radius 1-2) is recall-pinned by ExtSpec
     "q_ann_lsh" -> ((s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
       Similarity.lshTopK(e, e.filter(col("vec_id") % 100 === 0),
@@ -191,7 +191,7 @@ private[graft] object SimilarityRegistry {
     // Trained-centroid IVF ANN: k-means centroids from a
     // deterministic sample, corpus in its nearest cell — oracle-
     // checked: nProbe=7 of 8 cells is pinned to EXACT agreement with
-    // the exhaustive top-5 on this corpus (RecallProbe); production
+    // the exhaustive top-5 on this corpus (the oracle gate); production
     // probe fractions are recall-pinned by ExtSpec
     "q_ann_ivf_trained" -> ((s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
@@ -206,7 +206,7 @@ private[graft] object SimilarityRegistry {
     // then only |queries|·shortlist full vectors are re-ranked
     // exactly. Oracle-checked: shortlist=50 (of a ~640-vector
     // corpus — genuinely sub-exhaustive) re-ranks to EXACT agreement
-    // with the exhaustive top-5 (RecallProbe), so the DuckDB oracle
+    // with the exhaustive top-5 (the oracle gate), so the DuckDB oracle
     // recomputes the brute-force answer
     "q_ann_pq" -> ((s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
@@ -228,8 +228,8 @@ private[graft] object SimilarityRegistry {
     // the recall-pinned in-query rows' business); ADC shortlist =
     // 100 of the 400-vector final corpus stays genuinely
     // sub-exhaustive with exact re-rank from stored vectors (the
-    // stale model's worst true-top-5 ADC rank is 59 — RecallProbe-
-    // style margin ~1.7×). Oracle: brute-force top-5 over the final
+    // stale model's worst true-top-5 ADC rank is 59 — a shortlist
+    // margin of ~1.7×). Oracle: brute-force top-5 over the final
     // corpus. ──
     "q_ann_persisted" -> ((s, dir) => annPersisted(s, dir, "annidx")),
 
@@ -329,7 +329,7 @@ private[graft] object SimilarityRegistry {
     // IVF-style ANN: corpus in its nearest seed cell, queries probe
     // cells in projection order. Oracle-checked at TOTAL coverage
     // (nProbe = nCells): the data-blind seed cells never reach exact
-    // recall sub-exhaustively (RecallProbe: 3 misses even at 7/8),
+    // recall sub-exhaustively (3 misses even at 7/8 on this corpus),
     // so the gate instead pins the PLUMBING — cell assignment, probe
     // expansion, cell join, rank — which at total coverage must
     // reproduce the exhaustive top-5 at any scale; production

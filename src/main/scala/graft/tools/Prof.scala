@@ -1,224 +1,99 @@
 package graft.tools
 
-import graft.core.Records
-import graft.mapper.Mapper
-import graft.pipeline.{ImportService, Preset}
-import graft.sources.InlineSource
-import graft.targets.NodeTarget
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
 
-/** One-off phase profiler for heavy bench queries (builder-local
-  * iteration only; not part of the driver contract). Currently wired
-  * for the q_sync_apply_node replay: times each of the three sync
-  * cycles and the final removeAll separately, after a full sf0.001
-  * shape warmup, so diet changes can be attributed per phase. */
+/** Solo re-timer for `SparkEntry.queries` rows (not part of the driver
+  * contract). Usage:
+  *
+  * {{{graft.tools.Prof <dir> <query>... [-r N] [--explain]}}}
+  *
+  * The session comes from `SPARK_GRAFT_CPUS` as in Bench and Verify and
+  * is warmed once on q1_agg. Each rep clears the cache and forces the
+  * query with `count()`, as `Bench.timeOnce` does, so a solo re-time
+  * compares with its bench row. One line per query reports the best
+  * rep's wall, rows, jobs, executor CPU, shuffle read/write and spill
+  * bytes; `--explain` also prints the timed frame's formatted plan. */
 object Prof {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.util.Tables.session("prof", "32")
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    // per-phase job accounting: jobs launched + wall-clock inside jobs
-    // vs between them (driver-side planning/IO shows up as the gap)
-    val jobLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(j.jobId, j.time)
-        override def onJobEnd(
-            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = starts.getOrDefault(j.jobId, j.time)
-          jobLog.add((j.jobId.toLong, s, j.time))
-        }
-      })
-    def time[A](name: String)(f: => A): A = {
-      jobLog.clear()
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(100) // let listener events drain
-      val jobs = jobLog.size
-      val inJobs = jobLog.toArray(Array.empty[(Long, Long, Long)])
-        .map { case (_, s, e) => e - s }.sum / 1e3
-      println(f"[prof] $name%-22s $dt%7.2fs  jobs=$jobs%3d in-jobs=$inJobs%6.2fs gap=${dt - inJobs}%6.2fs")
-      r
-    }
-    // tfidf mode: dfreq-join broadcast headroom A/B — run the TF-IDF
-    // row with the broadcast path (default) vs forced SMJ fallback
-    // (autoBroadcastJoinThreshold=-1) and print both plans' join
-    // shapes. Usage: Prof tfidf <dir>
-    if (args.headOption.contains("tfidf")) {
-      val tDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-      graft.SparkEntry.queries("q_tfidf")(spark, "/root/testdata/sf0.001").count()
-      Seq(("broadcast(default)", "10485760"), ("smj(forced)", "-1"))
-        .foreach { case (label, thr) =>
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-          val df = graft.SparkEntry.queries("q_tfidf")(spark, tDir)
-          val t0 = System.nanoTime()
-          val n = df.count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val n2 = graft.SparkEntry.queries("q_tfidf")(spark, tDir).count()
-          val dt2 = (System.nanoTime() - t1) / 1e9
-          println(f"[prof] tfidf $label%-20s ${math.min(dt, dt2)}%6.2fs rows=$n")
-          df.queryExecution.executedPlan.toString.split("\n")
-            .filter(l => l.contains("Join") || l.contains("Exchange") ||
-              l.contains("Reused"))
-            .foreach(l => println("[plan] " + l.trim.take(150)))
-          val full = df.queryExecution.executedPlan.toString
-          println("[plan] reused-nodes=" +
-            full.split("\n").count(_.contains("ReusedExchange")) +
-            " scans=" + full.split("\n").count(_.contains("Scan parquet")))
-          full.split("\n").filter(l => l.contains("QueryStage") ||
-            l.toLowerCase.contains("reuse"))
-            .foreach(l => println("[stage] " + l.trim.take(120)))
-        }
-      // reuse probe: hand-built tf-persist variant — if this is much
-      // faster than the production row, the (id,tok) exchange is NOT
-      // being reused and the corpus tokenizes twice
-      locally {
-        import graft.ext.TextAnalysis
-        val d = spark.read.parquet(tDir + "/documents.parquet")
-        val nDocs = d.count()
-        (1 to 2).foreach { rep =>
-          val t0 = System.nanoTime()
-          val tf = graft.util.Tables.spread(d)
-            .select(col("doc_id").as("id"),
-              explode(TextAnalysis.normTokens(col("text"))).as("tok"))
-            .filter(length(col("tok")) > 0)
-            .groupBy(col("id"), col("tok"))
-            .agg(count(lit(1)).as("tf")).persist()
-          val dfreq = tf.groupBy(col("tok"))
-            .agg(count(lit(1)).as("n_docs"))
-            .withColumn("idf_micro",
-              floor(log(lit(nDocs.toDouble) / col("n_docs")) * 1000000L)
-                .cast("long"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("id"))
-            .orderBy(col("score_micro").desc, col("tok"))
-          val n = tf.join(dfreq, Seq("tok"))
-            .withColumn("score_micro", col("tf") * col("idf_micro"))
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= 3).count()
-          tf.unpersist()
-          println(f"[prof] tfidf persist-variant    ${(System.nanoTime()-t0)/1e9}%6.2fs rows=$n (rep $rep)")
-        }
-      }
-      spark.stop(); return
-    }
-    // explain mode: print a registry query's formatted physical plan
-    // plus a warmed timing — the ".explain and iterate" loop for new
-    // rows. Usage: Prof explain <query> [dir]
-    if (args.headOption.contains("explain")) {
-      val q = args(1)
-      val eDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-      val df = graft.SparkEntry.queries(q)(spark, eDir)
-      df.explain("formatted")
-      time(s"$q warmup")(df.collect())
-      time(q)(graft.SparkEntry.queries(q)(spark, eDir).count())
-      println("== AQE final plan ==")
-      df.explain("formatted")
-      spark.stop(); return
-    }
-    // annidx mode: phase-time the q_ann_persisted lifecycle (build →
-    // diff → refresh → probe) so index-machinery diets can be
-    // attributed per phase. Usage: Prof annidx <dir>
-    if (args.headOption.contains("annidx")) {
-      val aDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-      graft.SparkEntry.queries("q_ann_persisted")(
-        spark, "/root/testdata/sf0.001").count()
-      (1 to 2).foreach { round =>
-        println(s"── annidx round $round ──")
-        val e = spark.read.parquet(aDir + "/embeddings.parquet")
-        val root = graft.registry.Shared.tempStateDir() + "/annidx"
-        val initial = e.filter(col("vec_id") % 7 =!= 0)
-          .select(col("vec_id"),
-            when(col("vec_id") % 3 === 0, reverse(col("embedding")))
-              .otherwise(col("embedding")).as("embedding"),
-            lit(1L).as("version"))
-        time("build") {
-          graft.ext.VectorIndex.build(spark, initial, root,
-            nCells = 8, m = 16, k = 32)
-        }
-        val source = e.filter(col("vec_id") % 5 =!= 4)
-          .select(col("vec_id").cast("string").as("id"),
-            when(col("vec_id") % 3 === 0, lit(2L)).otherwise(lit(1L))
-              .as("version"),
-            col("embedding"))
-        val cs = time("diff") {
-          graft.core.Diff.computeDataChanges(
-            Records.keyRecords(source, "id", Some("version")),
-            initial.select(col("vec_id").cast("string").as("id"),
-              col("version")))
-        }
-        time("refresh") {
-          val changed = cs.added.select(col("id"), col("embedding"))
-            .unionByName(cs.updated.select(col("id"), col("embedding")))
-            .select(col("id").cast("long").as("vec_id"), col("embedding"))
-          val dropped = cs.removedIds
-            .unionByName(cs.updated.select(col("id")))
-            .select(col("id").cast("long").as("id"))
-          graft.ext.VectorIndex.refresh(spark, root, changed, dropped)
-        }
-        time("probe") {
-          val queries = e.filter(col("vec_id") % 100 === 0 &&
-            col("vec_id") % 5 =!= 4)
-          graft.ext.VectorIndex.probe(spark, root, queries,
-            k = 5, nProbe = 8, shortlist = 100).count()
-        }
-      }
-      spark.stop(); return
-    }
-    // shape warmup (JIT + codegen)
-    graft.SparkEntry.queries("q_sync_apply_node")(
-      spark, "/root/testdata/sf0.001").count()
 
-    (1 to 4).foreach { round =>
-      // rounds 3-4: AQE off A/B (job-count overhead hypothesis)
-      spark.conf.set("spark.sql.adaptive.enabled", round < 3)
-      println(s"── round $round (aqe=${spark.conf.get("spark.sql.adaptive.enabled")}) ──")
-      val path = graft.registry.Shared.tempStateDir() + "/nodes"
-      def src(sync: Int): DataFrame = {
-        val o = spark.read.parquet(s"$dir/orders.parquet")
-        val k = col("o_orderkey")
-        val v = unix_timestamp(col("o_orderdate"))
-        val (pred, ver) = sync match {
-          case 1 => (k % 3 =!= 0, v)
-          case 2 => (k % 5 =!= 0,
-            v + when(k % 2 === 0, 86400L).otherwise(0L))
-          case _ => (k % 7 =!= 0,
-            v + when(k % 11 === 0, 172800L).otherwise(0L))
-        }
-        o.filter(pred).select(
-          k.cast("string").as("id"), ver.as("version"),
-          when(k % 2 === 0, "even").otherwise("odd").as("bucket"),
-          lit(s"S$sync").as("src"))
-      }
-      (1 to 3).foreach { i =>
-        time(s"sync$i") {
-          val tg = NodeTarget(path, idPrefix = "node-", softDelete = true,
-            variantsResolver = _ => array(lit("de"), lit("en")),
-            parentPathResolver =
-              Some(df => concat(lit("/sites/"), col("bucket"))))
-          new ImportService(Preset(
-            InlineSource(_ => src(i)), tg, Mapper(Seq("src" -> "src")),
-            idAttribute = "id", versionAttribute = Some("version"),
-            diffOptions = tg.diffOptions)).importData(spark)
+  /** What the jobs between two [[Collector.take]]s cost. */
+  final case class Counters(
+      jobs: Int, cpuS: Double, shuffleReadBytes: Long,
+      shuffleWriteBytes: Long, shuffleRecordsRead: Long,
+      shuffleRecordsWritten: Long, spillBytes: Long)
+
+  /** Sums job starts and task metrics. Events arrive on the bus thread,
+    * so the sums are read only after [[GraftBus.drain]]. */
+  final class Collector(spark: SparkSession) extends SparkListener {
+    private var c = Counters(0, 0.0, 0L, 0L, 0L, 0L, 0L)
+    spark.sparkContext.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized { c = c.copy(jobs = c.jobs + 1) }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(e.taskMetrics).foreach { m =>
+        val r = m.shuffleReadMetrics
+        val w = m.shuffleWriteMetrics
+        synchronized {
+          c = c.copy(
+            cpuS = c.cpuS + m.executorCpuTime / 1e9,
+            shuffleReadBytes = c.shuffleReadBytes + r.totalBytesRead,
+            shuffleWriteBytes = c.shuffleWriteBytes + w.bytesWritten,
+            shuffleRecordsRead = c.shuffleRecordsRead + r.recordsRead,
+            shuffleRecordsWritten = c.shuffleRecordsWritten + w.recordsWritten,
+            spillBytes = c.spillBytes + m.memoryBytesSpilled +
+              m.diskBytesSpilled)
         }
       }
-      time("removeAll") {
-        NodeTarget(path, softDelete = true, rootPath = "/sites/odd")
-          .removeAll(spark)
+
+    /** Counters since the previous take (or since registration). */
+    def take(): Counters = {
+      GraftBus.drain(spark.sparkContext)
+      synchronized {
+        val out = c
+        c = Counters(0, 0.0, 0L, 0L, 0L, 0L, 0L)
+        out
       }
-      time("final read") {
-        NodeTarget(path).table(spark).count()
-      }
-      val parts = NodeTarget(path).stateDirResolved
-        .flatMap(d => Option(new java.io.File(d).listFiles()))
-        .map(_.count(_.getName.startsWith("part-"))).getOrElse(-1)
-      println(s"[prof] state part-files: $parts")
+    }
+  }
+
+  /** Runs `f` once: its wall seconds, its result, and the counters of
+    * exactly the jobs it ran. */
+  def measure[A](collector: Collector)(f: => A): (Double, A, Counters) = {
+    collector.take()
+    val t0 = System.nanoTime()
+    val out = f
+    val secs = (System.nanoTime() - t0) / 1e9
+    (secs, out, collector.take())
+  }
+
+  def main(args: Array[String]): Unit = {
+    val rIdx = args.indexOf("-r")
+    val reps = if (rIdx >= 0) args(rIdx + 1).toInt else 1
+    val rest = (if (rIdx >= 0) args.patch(rIdx, Nil, 2) else args).toSeq
+    val explain = rest.contains("--explain")
+    val positional = rest.filterNot(_ == "--explain")
+    val (dir, names) = (positional.head, positional.tail)
+    val spark = graft.util.Tables.session("prof",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val collector = new Collector(spark)
+    graft.SparkEntry.queries("q1_agg")(spark, dir).count()
+    names.foreach { name =>
+      val (secs, (df, rows), c) = (1 to reps).map { _ =>
+        spark.catalog.clearCache()
+        measure(collector) {
+          val df = graft.SparkEntry.queries(name)(spark, dir)
+          (df, df.count())
+        }
+      }.minBy(_._1)
+      println(f"[prof] $name%-24s best=$secs%7.2fs rows=$rows jobs=${c.jobs} " +
+        f"cpu=${c.cpuS}%.2fs shuffle_read=${c.shuffleReadBytes}B " +
+        f"shuffle_write=${c.shuffleWriteBytes}B spill=${c.spillBytes}B")
+      // the timed frame, not a rebuilt one: rebuilding would re-run any
+      // eager checkpoint inside the query
+      if (explain) df.explain("formatted")
     }
     spark.stop()
   }

@@ -97,7 +97,8 @@ object GenIndex {
     * refresh Spark-wrote (integer buckets print identically in the
     * dir name and `String.valueOf`). Returns the carried-dir count.
     *
-    * NOTE — measured limit (RefreshScale, 100x-kg): dir-level carry
+    * NOTE — measured limit (BASELINE.md "Round-18: delta-proportional
+    * refresh COMMITS", 100x-kg): dir-level carry
     * only pays for TINY deltas. With a bounded dir count (64) any
     * realistic delta (thousands of rows × hash-distributed buckets)
     * touches every dir, so the "partial" rewrite degenerates to the

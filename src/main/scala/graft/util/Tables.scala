@@ -53,37 +53,19 @@ object Tables {
     * count satisfies the join's expected partitioning; a larger
     * global initial number makes the planner disable the bucketed
     * scan and re-exchange the state side, PipelineSpec pins this).
-    * For LARGE-scale runs set `GRAFT_INITIAL_PARTITIONS` (e.g. 256):
-    * AQE then starts every shuffle that wide and COALESCES by size —
-    * small stages still land on a handful of post-coalesce
-    * partitions, while a 100×-scale sort gets splits that fit task
-    * memory (a fixed 32-way sort of a 60M-row join output OOMs at
-    * the default heap — the r17 q_pagerank 100×-kg smoke). This is
-    * the knob a real deployment sizes per target SF, together with
-    * bucket counts sized to match. */
+    * AQE's initial partition number, the parquet codec and the
+    * shuffled-hash-join local-map threshold are Spark's own defaults
+    * (initial = `shuffle.partitions`, snappy, 0 — PipelineSpec pins
+    * them too). A deployment sets them through the standard
+    * `spark.sql.*` settings: at 100× scale a fixed 32-way sort of a
+    * 60M-row join output OOMs at the default heap (the r17 q_pagerank
+    * smoke), so a wider `coalescePartitions.initialPartitionNum`,
+    * with bucket counts sized to match, is the knob sized per SF. */
   def session(appName: String, cpus: String): SparkSession = {
-    val initial = sys.env.getOrElse("GRAFT_INITIAL_PARTITIONS", cpus)
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initial)
-      // Production posture knobs, env-parameterized with the local
-      // defaults unchanged so driver bench series stay comparable:
-      //  - GRAFT_PARQUET_CODEC=zstd shrinks state/index bytes ~30-40%
-      //    at similar read speed (guide §6) — the right trade on
-      //    object stores; snappy locally (the historical series).
-      //  - GRAFT_SHJ_LOCALMAP (e.g. "64m") lets AQE rewrite a
-      //    sort-merge join to shuffled-hash when every post-shuffle
-      //    build partition is under the bound — skips the sort, with
-      //    the OOM risk bounded per partition by the same number
-      //    (guide §3.1). Off ("0") by default: at 100 TB the safe
-      //    default is SMJ unless the operator is measured.
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("GRAFT_PARQUET_CODEC", "snappy"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_SHJ_LOCALMAP", "0"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Registry ↔ oracle contract: every query has an oracle and vice
   * versa (the driver's set-equality check), including the LAZY
   * data-parameterized tail (the trained-unigram oracle trains on
@@ -35,5 +37,31 @@ class RegistrySpec extends SparkSpec {
       assert(trained.contains("('the'") || trained.contains("('laz'") ||
         trained.contains("('dog'"), "trained vocab literals missing")
     } finally graft.registry.Shared.verifySfDir = prev
+  }
+
+  test("main code reads no environment variable outside the deployment " +
+      "and Bench-budget allow-list") {
+    val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_REPLAY_TIMEOUT_MS", "GRAFT_BENCH_WARMUP_BUDGET_S",
+      "GRAFT_BENCH_ATTEMPT2_BUDGET_S", "GRAFT_BENCH_DEGRADE_BUDGET_S")
+    val files = {
+      val walk = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .toList
+      finally walk.close()
+    }
+    assert(files.size > 50, "main sources not found from the test cwd")
+    val read = "(sys\\.env|System\\.getenv)".r
+    val envName = "\"([A-Z][A-Z0-9]*_[A-Z0-9_]+)\"".r
+    // in a file that reads the environment, every quoted env-style
+    // name counts — also one passed through a helper (Bench's envSec)
+    val offenders = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      if (read.findFirstIn(text).isEmpty) Nil
+      else envName.findAllMatchIn(text).map(_.group(1))
+        .filterNot(allowed).map(n => s"${f.getFileName}: $n").toList
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
   }
 }

@@ -407,94 +407,4 @@ class FunctionsSpec extends SparkSpec {
       assert(r.getDouble(2) === r.getDouble(3), s"double row $r")
     }
   }
-
-  // ── word_shingles (r18 kernel) ──────────────────────────────────
-
-  /** The HOF reference formulation word_shingles replaced — kept
-    * verbatim so the kernel's bit-equality stays spec-pinned. */
-  private def hofShingles(
-      text: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
-    val tokens = graft.ext.TextAnalysis.normTokens(text)
-    val nTok = size(tokens)
-    val grams = (2 to n).foldLeft(tokens) { (acc, k) =>
-      zip_with(acc, slice(tokens, lit(k), greatest(nTok - k + 1, lit(0))),
-        (a, b) => concat(a, lit(" "), b))
-    }
-    array_sort(array_distinct(
-      when(nTok < n, array(concat_ws(" ", tokens)))
-        .otherwise(slice(grams, lit(1), nTok - n + 1))))
-  }
-
-  test("word_shingles matches the HOF formulation bit-for-bit: plain, " +
-      "duplicate-gram, short (< n tokens), empty, null, unicode, and " +
-      "whitespace-noise texts, across n in 1..4") {
-    val texts = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog"),
-      (1L, "a b a b a b a b"),               // duplicate grams
-      (2L, "one two"),                        // nTok < 3
-      (3L, "single"),                         // nTok < 2
-      (4L, ""),                               // empty -> [""] token
-      (5L, null.asInstanceOf[String]),        // null text -> null
-      (6L, "  Mixed   CASE \t text\nwith  runs "),
-      (7L, "héllo wörld æøå ünïcode ßtring here"),
-      (8L, "x " * 200 + "tail"))              // long repeated text
-      .toDF("id", "text")
-    (1 to 4).foreach { n =>
-      val got = texts.select(col("id"),
-        graft.functions.GraftFunctions.word_shingles(
-          graft.ext.TextAnalysis.normTokens(col("text")), n).as("k"),
-        hofShingles(col("text"), n).as("h"))
-      got.collect().foreach { r =>
-        assert(r.isNullAt(1) === r.isNullAt(2), s"n=$n null row $r")
-        if (!r.isNullAt(1))
-          assert(r.getSeq[String](1) === r.getSeq[String](2),
-            s"n=$n id=${r.getLong(0)}")
-      }
-    }
-  }
-
-  test("word_shingles: null TOKEN elements follow the concat/concat_ws " +
-      "contracts (null-propagating gram, skipped in the short join), " +
-      "distinct keeps one null and sorts it last") {
-    val arr = Seq(
-      (0L, Seq[String]("a", null, "b", "c")),   // nTok=4 >= n=2
-      (1L, Seq[String](null, "z")),             // null gram only at n=2? (null,z) -> null
-      (2L, Seq[String]("a", null)))             // short for n=3: join skips null
-      .toDF("id", "toks")
-    def hofOnTokens(n: Int) = {
-      val tokens = col("toks")
-      val nTok = size(tokens)
-      val grams = (2 to n).foldLeft(tokens) { (acc, k) =>
-        zip_with(acc, slice(tokens, lit(k), greatest(nTok - k + 1, lit(0))),
-          (a, b) => concat(a, lit(" "), b))
-      }
-      array_sort(array_distinct(
-        when(nTok < n, array(concat_ws(" ", tokens)))
-          .otherwise(slice(grams, lit(1), nTok - n + 1))))
-    }
-    Seq(2, 3).foreach { n =>
-      val got = arr.select(col("id"),
-        graft.functions.GraftFunctions.word_shingles(col("toks"), n).as("k"),
-        hofOnTokens(n).as("h"))
-      got.collect().foreach { r =>
-        assert(r.isNullAt(1) === r.isNullAt(2), s"n=$n row $r")
-        if (!r.isNullAt(1))
-          assert(r.getSeq[String](1) === r.getSeq[String](2),
-            s"n=$n id=${r.getLong(0)}")
-      }
-    }
-  }
-
-  test("word_shingles callable from SQL and matches on the corpus " +
-      "fixture end to end") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val both = docs.select(
-      graft.functions.GraftFunctions.word_shingles(
-        graft.ext.TextAnalysis.normTokens(col("text")), 3).as("k"),
-      hofShingles(col("text"), 3).as("h"))
-    both.collect().foreach { r =>
-      assert(r.getSeq[String](0) === r.getSeq[String](1))
-    }
-  }
 }

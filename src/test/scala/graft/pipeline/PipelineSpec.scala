@@ -337,6 +337,14 @@ class PipelineSpec extends SparkSpec {
     // keying dedup already exchanges on __id at that count, so the
     // join reuses it and the WHOLE diff runs on one exchange
     val nShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the session inherits Spark's own defaults for the settings the
+    // bucketing and the bench series depend on: AQE starts every
+    // shuffle at the bucket count, snappy state files, no SHJ rewrite
+    val conf = spark.sessionState.conf
+    assert(conf.numShufflePartitions === nShuffle)
+    assert(conf.parquetCompressionCodec === "snappy")
+    assert(conf.getConf(org.apache.spark.sql.internal.SQLConf
+      .ADAPTIVE_MAX_SHUFFLE_HASH_JOIN_LOCAL_MAP_THRESHOLD) === 0L)
     val bucketed = FileTarget(s"$dir/bstate", buckets = nShuffle)
     seed(bucketed)
 

@@ -172,11 +172,11 @@ def check(anchors_path, bench_path):
                   f"{len(qs)}/{len(anchors)} readings were parseable "
                   "(truncated driver tail) - contiguity is not "
                   "assessable; re-time the flagged rows solo with "
-                  "graft.tools.TimeQ")
+                  "graft.tools.Prof <dir> <query> -r 2")
         else:
             print("  high rows are ISOLATED - candidate real "
-                  "regressions; re-time solo with graft.tools.TimeQ "
-                  "before judging")
+                  "regressions; re-time solo with graft.tools.Prof "
+                  "<dir> <query> -r 2 before judging")
     return 1 if (high and not windows) else 0
 
 

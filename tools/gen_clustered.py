@@ -7,9 +7,10 @@ bad by construction (every cell boundary cuts true neighbor sets —
 coverage-bound recall, BASELINE.md r16). Real corpora are clustered —
 IVF's premise. This writes an `embeddings.parquet` with the driver
 schema (vec_id int64, embedding list<float> d=64, label int32) drawn
-from G spherical Gaussian clusters, so `tools/AnnScale` can measure
-buildAuto recall where the premise holds. Other tables are copied
-from a donor sf dir (AnnScale's warmup reads lineitem).
+from G spherical Gaussian clusters, so buildAuto recall can be
+measured where the premise holds (BASELINE.md "Round-17:
+clustered-corpus recall"). `lineitem` and `orders` are copied from
+a donor sf dir, so a profiling session's q1_agg warm-up reads OUT_DIR.
 
 Usage: gen_clustered.py OUT_DIR [N] [G] [SIGMA] [DONOR_SF_DIR]
 """
