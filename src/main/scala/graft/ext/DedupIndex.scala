@@ -161,7 +161,8 @@ object DedupIndex {
     * the full-rewrite reference that DedupIndexSpec's delta test
     * compares the segmented commit against. Degenerate
     * (empty-marker) layouts fall back to the full rewrite
-    * automatically. */
+    * automatically. An empty change set (nothing changed, nothing
+    * dropped) returns without committing. */
   def refresh(
       spark: SparkSession, root: String, changedDocs: DataFrame,
       droppedIds: DataFrame, idCol: String = "doc_id",
@@ -180,6 +181,10 @@ object DedupIndex {
     val chB = Dedup.bandedSignatures(
       Dedup.signaturesFromShingled(chSh, k, baseHash), k, nBands)
     try {
+      // an empty delta commits nothing: no generation, segment, ledger
+      // rewrite or pointer flip. Short-circuit on the cached frames, so
+      // a non-empty refresh pays at most one tiny job over its blocks.
+      if (drop.isEmpty && chSh.isEmpty) return
       val gen = graft.util.GenSwap.nextDir(root)
       val segs = graft.util.GenIndex.segValues(bandsPath(cur))
       val delta = deltaCommit && segs.nonEmpty &&

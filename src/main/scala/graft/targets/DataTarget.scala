@@ -142,6 +142,7 @@ object DataTarget {
  * copy-on-write lakehouse pattern (what Delta/Iceberg do per file
  * group); at 100 TB the same logic applies per partition directory
  * with dynamic partition overwrite rather than whole-table rewrite.
+ * An empty delta over a committed state writes nothing.
  */
 final case class FileTarget(
     path: String,
@@ -409,12 +410,14 @@ final case class FileTarget(
     currentStateNoRecover(spark)
   }
 
+  /** A committed state to read: a registered bucketed state is
+    * readable even with ZERO data files (the catalog holds the
+    * schema) — checked before the on-disk existence probe. */
+  private def hasState(spark: SparkSession): Boolean =
+    (buckets > 0 && spark.catalog.tableExists(tableName)) || exists
+
   private def currentStateNoRecover(spark: SparkSession): DataFrame = {
-    // a registered bucketed state is readable even with ZERO data
-    // files (the catalog holds the schema) — check it before the
-    // on-disk existence probe
-    val bucketedReg = buckets > 0 && spark.catalog.tableExists(tableName)
-    if (!bucketedReg && !exists) {
+    if (!hasState(spark)) {
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
@@ -447,7 +450,29 @@ final case class FileTarget(
     val csp = cs.persisted()
     val addedM = mapped(csp.added)
     val updatedM = mapped(csp.updated)
+    // Branch counts BEFORE the state write (one job, not three): it
+    // materializes the lazy localCheckpoint, so the write below
+    // re-scans in-memory checkpoint blocks instead of forcing its own
+    // diff evaluation — and an empty delta over a committed state
+    // skips the write, manifest and swap altogether (a no-op sync
+    // rewrites nothing). A first sync still creates the state.
+    val (nAdd, nUpd, nRem) = csp.counts
+    if (nAdd + nUpd + nRem > 0 || !hasState(spark))
+      commitNext(spark, csp, addedM, updatedM)
+    // Dispatch BEFORE releasing the checkpointed diff: the phase
+    // payload frames (addedM/updatedM) are plans over the snapshot —
+    // a listener evaluating them after unpersist would find the
+    // checkpoint blocks gone.
+    DataTarget.dispatchSnapshotPhases(dispatch,
+      addedM, nAdd, updatedM, nUpd, csp.removedIds, nRem, idCol = idColumn)
+    csp.unpersist()
+    ApplyResult(nAdd, nUpd, nRem)
+  }
 
+  /** Stage `old ∖ (updated ∪ removed) ∪ added ∪ updated` in the
+    * target's layout and swap it in. */
+  private def commitNext(spark: SparkSession, csp: ChangeSet,
+      addedM: DataFrame, updatedM: DataFrame): Unit = {
     // touched partition buckets (partitioned mode): collect is ≤
     // `partitions` longs, driver-side metadata — not data
     val touchedParts: Array[Long] =
@@ -525,21 +550,6 @@ final case class FileTarget(
       writeManifest(staging, Seq("*:swap"))
       completeSwap(manifestFile)
     }
-    // Branch counts AFTER the state write (one job, not three): the
-    // write (or, in partitioned mode, the touchedParts collect) is
-    // what materializes the lazy localCheckpoint, so this aggregation
-    // re-scans in-memory checkpoint blocks instead of forcing its own
-    // standalone diff evaluation — measured ~0.3-0.8 s per sync at
-    // sf0.1 (the r12 node-sink replay diet).
-    val (nAdd, nUpd, nRem) = csp.counts
-    // Dispatch BEFORE releasing the checkpointed diff: the phase
-    // payload frames (addedM/updatedM) are plans over the snapshot —
-    // a listener evaluating them after unpersist would find the
-    // checkpoint blocks gone.
-    DataTarget.dispatchSnapshotPhases(dispatch,
-      addedM, nAdd, updatedM, nUpd, csp.removedIds, nRem, idCol = idColumn)
-    csp.unpersist()
-    ApplyResult(nAdd, nUpd, nRem)
   }
 
   override def removeAll(spark: SparkSession): Long = {

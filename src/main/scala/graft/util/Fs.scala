@@ -18,11 +18,17 @@ object Fs {
 
   /** Active session's Hadoop conf when one exists (carries
     * `fs.defaultFS` plus any object-store credentials the deployment
-    * set); a vanilla local conf otherwise (driver tools, early CLI). */
+    * set); otherwise a vanilla conf with the session's local
+    * filesystem ([[Tables.session]]) — Hadoop caches one `file://`
+    * instance per JVM, so the first caller's choice holds for all. */
   def conf: Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
+      .getOrElse {
+        val c = new Configuration()
+        c.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+        c
+      }
 
   def path(s: String): Path = new Path(s)
 
@@ -108,10 +114,9 @@ object Fs {
     * local filesystem, every file is HARD-LINKED — O(metadata) per
     * file, zero new bytes on disk, and the link survives deletion of
     * the source dir — and every directory is created through
-    * `java.nio` (Hadoop's local `mkdirs` forks a `chmod` process per
-    * directory when the native library is absent). Elsewhere falls
-    * back to [[copyRec]]: on object stores that is a per-object copy —
-    * no executor re-encode, but O(bytes) through the copier. The
+    * `java.nio`, like the links beside it. Elsewhere falls back to
+    * [[copyRec]]: on object stores that is a per-object copy — no
+    * executor re-encode, but O(bytes) through the copier. The
     * delta-narrowed index refreshes ([[GenIndex.carrySegs]]) use this
     * to carry untouched segment dirs into a new generation. */
   def linkOrCopyRec(src: Path, dst: Path): Unit = {

@@ -60,7 +60,13 @@ object Tables {
     * `spark.sql.*` settings: at 100× scale a fixed 32-way sort of a
     * 60M-row join output OOMs at the default heap (the r17 q_pagerank
     * smoke), so a wider `coalescePartitions.initialPartitionNum`,
-    * with bucket counts sized to match, is the knob sized per SF. */
+    * with bucket counts sized to match, is the knob sized per SF.
+    *
+    * `fs.file.impl` is [[NioLocalFileSystem]]: `file://` paths resolve
+    * to a `LocalFileSystem` that sets permissions through `java.nio`
+    * instead of forking `chmod` per created file and dir. The session's
+    * Hadoop conf carries it to the [[Fs]] calls and the
+    * task-side writes alike; other schemes are untouched. */
   def session(appName: String, cpus: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -70,6 +76,8 @@ object Tables {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[NioLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(s)

@@ -227,6 +227,54 @@ class DedupIndexSpec extends SparkSpec {
         .select($"id_l".cast("long"), $"id_r".cast("long"), $"jaccard")))
   }
 
+  test("an empty refresh commits nothing: generation, segments, files " +
+      "and probe answers unchanged; a later non-empty refresh still " +
+      "equals a rebuild") {
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("didx") + "/empty"
+    DedupIndex.build(spark, corpus(1L to 30L), root)
+    DedupIndex.refresh(spark, root, Seq(doc(31L)).toDF("doc_id", "text"),
+      Seq(2L).toDF("id")) // a delta segment and a ledger to keep
+    def files(): Map[String, Long] = {
+      val r = java.nio.file.Paths.get(root)
+      java.nio.file.Files.walk(r).iterator().asScala
+        .map(p => r.relativize(p).toString ->
+          java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
+    }
+    val gen = graft.util.GenSwap.currentGen(root)
+    val dir = graft.util.GenSwap.currentDir(root).get
+    val segs = graft.util.GenIndex.segValues(s"$dir/bands")
+    val before = files()
+    val batch = (101L to 110L).map(doc(_)).toDF("doc_id", "text")
+    def answer(at: String) = pairs(
+      DedupIndex.probe(spark, at, batch, threshold = 0.5)
+        .select($"id_l".cast("long"), $"id_r".cast("long"), $"jaccard"))
+    val probed = answer(root)
+    assert(probed.nonEmpty)
+    Thread.sleep(20) // a rewrite would move the millisecond mtimes
+    DedupIndex.refresh(spark, root,
+      Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      Seq.empty[Long].toDF("id"))
+    assert(graft.util.GenSwap.currentGen(root) === gen)
+    assert(graft.util.GenIndex.segValues(s"$dir/bands") === segs)
+    assert(files() === before)
+    assert(answer(root) === probed)
+    // the next non-empty refresh lands on top and equals a rebuild
+    DedupIndex.refresh(spark, root,
+      Seq(doc(32L), doc(5L, "updated")).toDF("doc_id", "text"),
+      Seq(5L, 7L).toDF("id"))
+    assert(graft.util.GenSwap.currentGen(root) !== gen)
+    val finalCorpus = ((1L +: (3L to 4L)) ++ (6L to 6L) ++ (8L to 32L))
+      .map(doc(_)) :+ doc(5L, "updated")
+    val rebuilt = tmpDir("didx") + "/empty-rebuild"
+    DedupIndex.build(spark, finalCorpus.toDF("doc_id", "text"), rebuilt)
+    assert(answer(root) === answer(rebuilt))
+    def liveIds(at: String) = DedupIndex.shinglesTable(spark,
+        graft.util.GenSwap.currentDir(at).get)
+      .select($"id".cast("long")).distinct().collect().map(_.getLong(0)).toSet
+    assert(liveIds(root) === liveIds(rebuilt))
+  }
+
   test("broadcastBatch=false (the backfill escape hatch) answers " +
       "bit-identically to the pinned-broadcast default") {
     val c = corpus(1L to 60L)

@@ -191,6 +191,70 @@ class PipelineSpec extends SparkSpec {
     assert(progress(ImportEvent.DoRemoveData).sampleIds === Seq("c"))
   }
 
+  test("a no-op sync commits nothing in every layout: each state file " +
+      "keeps its name and mtime, the result is (0, 0, 0) and no phase " +
+      "event fires; a first sync from an empty source creates the state") {
+    import scala.jdk.CollectionConverters._
+    def files(root: String): Map[String, Long] = {
+      val r = java.nio.file.Paths.get(root)
+      java.nio.file.Files.walk(r).iterator().asScala
+        .filter(p => p != r)
+        .map(p => r.relativize(p).toString ->
+          java.nio.file.Files.getLastModifiedTime(p).toMillis)
+        .toMap
+    }
+    def preset(target: FileTarget, src: Seq[(String, Long, String)]) =
+      Preset(
+        InlineSource(s => { import s.implicits._
+          src.toDF("id", "version", "name") }),
+        target, Mapper(Seq("id" -> "id", "name" -> "name")),
+        idAttribute = "id", versionAttribute = Some("version"))
+    val rows = (1 to 40).map(i => (s"id$i", 1L, s"n$i"))
+    Seq(0 -> 0, 4 -> 0, 0 -> 4).foreach { case (buckets, partitions) =>
+      val layout = s"buckets=$buckets partitions=$partitions"
+      val dir = tmpDir("pipeline-noop")
+      val target = FileTarget(s"$dir/target", buckets = buckets,
+        partitions = partitions)
+      new ImportService(preset(target, rows)).importData(spark)
+      val before = files(dir)
+      Thread.sleep(20) // a rewrite would move the millisecond mtimes
+      val seen = scala.collection.mutable.ArrayBuffer[(ImportEvent.Value, Any)]()
+      val r = new ImportService(preset(target, rows))
+        .on((e, payload) => seen += (e -> payload)).importData(spark)
+      assert((r.added, r.updated, r.removed) === ((0L, 0L, 0L)), layout)
+      assert(files(dir) === before, layout)
+      import ImportEvent._
+      assert(seen.map(_._1).toSeq ===
+        Seq(PreComputeChanges, PreImportData, Finalize), layout)
+      assert(seen.last._2 === r, layout)
+      assert(spark.read.parquet(s"$dir/target").count() === 40L, layout)
+    }
+    // first sync from an EMPTY source still creates a readable state
+    // (flat: files at the path; bucketed: the catalog table) and its
+    // no-op re-run keeps it
+    Seq(0, 4).foreach { buckets =>
+      val dir = tmpDir("pipeline-empty-first")
+      val target = FileTarget(s"$dir/target", buckets = buckets)
+      val r1 = new ImportService(preset(target, Nil)).importData(spark)
+      assert((r1.added, r1.updated, r1.removed) === ((0L, 0L, 0L)))
+      assert(target.currentState(spark).count() === 0L)
+      if (buckets > 0) {
+        // the catalog name FileTarget derives from the path
+        val name = "graft_state_" + java.security.MessageDigest
+          .getInstance("MD5").digest(s"$dir/target".getBytes("UTF-8"))
+          .map("%02x".format(_)).mkString.take(16)
+        assert(spark.catalog.tableExists(name))
+      } else assert(spark.read.parquet(s"$dir/target").count() === 0L)
+      val before = files(dir)
+      Thread.sleep(20)
+      new ImportService(preset(target, Nil)).importData(spark)
+      assert(files(dir) === before)
+      val r3 = new ImportService(preset(target, rows.take(3))).importData(spark)
+      assert(r3.added === 3L)
+      assert(target.currentState(spark).count() === 3L)
+    }
+  }
+
   test("partitioned copy-on-write: untouched partition dirs are not " +
       "rewritten") {
     val dir = tmpDir("pipeline-cow")
