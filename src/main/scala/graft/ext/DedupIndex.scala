@@ -20,13 +20,12 @@ import org.apache.spark.sql.functions._
  * Layout under the generation root ([[graft.util.GenSwap]] — the
  * same O(pointer) object-store commit as every persisted state
  * here):
- *  - `gen-<n>/bands/seg=<k>/`    (id, band, bucket) PARTITIONED BY
- *    `__bbucket = pmod(bucket, 64)`, rows sorted by (band, bucket)
- *    inside each dir: a broadcast probe joins on the partition
- *    column, so partition pruning narrows the scan to the batch's
- *    buckets (per segment) and row-group stats prune within
+ *  - `gen-<n>/bands/seg=<k>/`    (id, band, bucket) — flat files,
+ *    hash-partitioned and sorted by (band, bucket); AQE sizes the
+ *    file count from the data, so a segment is a few files and a
+ *    probe lists it without a parallel listing job
  *  - `gen-<n>/shingles/seg=<k>/` (id, sh) — the exact-verification
- *    sets, PARTITIONED BY `__sbucket = pmod(xxhash64(id), 64)`
+ *    sets, flat files hash-partitioned by id
  *  - `gen-<n>/tomb/`   (id, tseq) — the dropped-id ledger shared by
  *    both tables ([[graft.util.GenIndex.readSegmented]] masking)
  *  - `gen-<n>/params/` (k, bands, n) — one row; probes and refreshes
@@ -39,13 +38,9 @@ import org.apache.spark.sql.functions._
  * Spark-writes ONLY one delta-sized `seg=<k>` per table plus the
  * (delta-scale) tombstone ledger — every previous segment carries
  * forward as hard links ([[graft.util.Fs.linkOrCopyRec]]:
- * zero new bytes on local stores; per-object copy elsewhere). Dir-
- * level partial rewrites were measured NOT to help here
- * (BASELINE.md "Round-18: delta-proportional refresh COMMITS": a
- * ~1% delta hash-touches all 64 bounded dirs), so
- * the segment/tombstone layout is the mechanism; segment count is
- * bounded by [[graft.util.GenIndex.MaxSegments]], past which the
- * refresh COMPACTS (one full rewrite per MaxSegments refreshes —
+ * zero new bytes on local stores; per-object copy elsewhere). Segment
+ * count is bounded by [[graft.util.GenIndex.MaxSegments]], past which
+ * the refresh COMPACTS (one full rewrite per MaxSegments refreshes —
  * amortized delta-proportional, the LSM trade).
  */
 object DedupIndex {
@@ -55,32 +50,13 @@ object DedupIndex {
   private def paramsPath(dir: String) = s"$dir/params"
   private def tombPath(dir: String) = s"$dir/tomb"
 
-  /** Fixed band-bucket directory count — bounded like the vector
-    * index's `__cbucket` (the dir count must not grow with the
-    * corpus). */
-  private val BandBuckets = 64L
-
-  private def bucketDir(bucket: Column): Column =
-    pmod(bucket, lit(BandBuckets))
-
-  /** Shingles-table partition: a pure function of the id — bounded
-    * dirs, row-group locality by id. */
-  private def shingleDir(id: Column): Column =
-    pmod(xxhash64(id), lit(BandBuckets))
-
-  private def writeBands(
-      spark: SparkSession, segDir: String, banded: DataFrame): Unit = {
-    val bb = banded.withColumn("__bbucket", bucketDir(col("bucket")))
-    bb.repartition(col("__bbucket"))
+  private def writeBands(segDir: String, banded: DataFrame): Unit =
+    banded.repartition(col("band"), col("bucket"))
       .sortWithinPartitions(col("band"), col("bucket"))
-      .write.partitionBy("__bbucket").parquet(segDir)
-  }
+      .write.parquet(segDir)
 
-  private def writeShingles(
-      spark: SparkSession, segDir: String, shingles: DataFrame): Unit =
-    shingles.withColumn("__sbucket", shingleDir(col("id")))
-      .repartition(col("__sbucket"))
-      .write.partitionBy("__sbucket").parquet(segDir)
+  private def writeShingles(segDir: String, shingles: DataFrame): Unit =
+    shingles.repartition(col("id")).write.parquet(segDir)
 
   /** LIVE rows of the two stored tables (segments unioned, tombstone
     * ledger applied). Public: the spec-side view of committed state. */
@@ -90,11 +66,6 @@ object DedupIndex {
   def shinglesTable(spark: SparkSession, genDir: String): DataFrame =
     graft.util.GenIndex.readSegmented(
       spark, shinglesPath(genDir), tombPath(genDir))
-
-  private def bandsMarkerSchema(banded: DataFrame) =
-    banded.withColumn("__bbucket", lit(0L)).schema
-  private def shinglesMarkerSchema(shingles: DataFrame) =
-    shingles.withColumn("__sbucket", lit(0L)).schema
 
   private def writeParamsTable(
       spark: SparkSession, dir: String, k: Int, nBands: Int,
@@ -129,17 +100,8 @@ object DedupIndex {
       // SAME cached shingled frame) — run them concurrently and
       // settle all before the commit (GenIndex.writeAll)
       graft.util.GenIndex.writeAll(
-        () => {
-          writeBands(spark, s"${bandsPath(gen)}/seg=0", banded)
-          graft.util.GenIndex.ensureSegReadable(spark, bandsPath(gen),
-            s"${bandsPath(gen)}/seg=0", bandsMarkerSchema(banded))
-        },
-        () => {
-          writeShingles(spark, s"${shinglesPath(gen)}/seg=0", sh)
-          graft.util.GenIndex.ensureSegReadable(spark,
-            shinglesPath(gen), s"${shinglesPath(gen)}/seg=0",
-            shinglesMarkerSchema(sh))
-        },
+        () => writeBands(s"${bandsPath(gen)}/seg=0", banded),
+        () => writeShingles(s"${shinglesPath(gen)}/seg=0", sh),
         () => writeParamsTable(spark, gen, k, bands, n))
       graft.util.GenSwap.commit(root, gen)
     } finally { sh.unpersist(); () }
@@ -159,10 +121,8 @@ object DedupIndex {
     * COMPACTS (full rewrite into a fresh seg=0, ledger cleared).
     * `deltaCommit = false` forces the compaction path every time —
     * the full-rewrite reference that DedupIndexSpec's delta test
-    * compares the segmented commit against. Degenerate
-    * (empty-marker) layouts fall back to the full rewrite
-    * automatically. An empty change set (nothing changed, nothing
-    * dropped) returns without committing. */
+    * compares the segmented commit against. An empty change set
+    * (nothing changed, nothing dropped) returns without committing. */
   def refresh(
       spark: SparkSession, root: String, changedDocs: DataFrame,
       droppedIds: DataFrame, idCol: String = "doc_id",
@@ -193,11 +153,11 @@ object DedupIndex {
         val sv = segs.max + 1
         graft.util.GenIndex.writeAll(
           () => {
-            writeBands(spark, s"${bandsPath(gen)}/seg=$sv", chB)
+            writeBands(s"${bandsPath(gen)}/seg=$sv", chB)
             graft.util.GenIndex.carrySegs(bandsPath(cur), bandsPath(gen))
           },
           () => {
-            writeShingles(spark, s"${shinglesPath(gen)}/seg=$sv",
+            writeShingles(s"${shinglesPath(gen)}/seg=$sv",
               chSh.select(col("id"), col("sh")))
             graft.util.GenIndex.carrySegs(
               shinglesPath(cur), shinglesPath(gen))
@@ -206,7 +166,7 @@ object DedupIndex {
             tombPath(gen), drop, sv),
           () => writeParamsTable(spark, gen, k, nBands, n))
       } else {
-        // compaction / empty-marker / forced-full: merge the LIVE state
+        // compaction / forced-full: merge the LIVE state
         // (tombstones applied) with the delta into a fresh seg=0;
         // the ledger resets
         val prevB = bandsTable(spark, cur)
@@ -214,20 +174,11 @@ object DedupIndex {
         val prevS = shinglesTable(spark, cur)
           .select(col("id"), col("sh"))
         graft.util.GenIndex.writeAll(
-          () => {
-            writeBands(spark, s"${bandsPath(gen)}/seg=0",
-              prevB.join(drop, Seq("id"), "left_anti").unionByName(chB))
-            graft.util.GenIndex.ensureSegReadable(spark, bandsPath(gen),
-              s"${bandsPath(gen)}/seg=0", bandsMarkerSchema(chB))
-          },
-          () => {
-            writeShingles(spark, s"${shinglesPath(gen)}/seg=0",
-              prevS.join(drop, Seq("id"), "left_anti")
-                .unionByName(chSh.select(col("id"), col("sh"))))
-            graft.util.GenIndex.ensureSegReadable(spark,
-              shinglesPath(gen), s"${shinglesPath(gen)}/seg=0",
-              shinglesMarkerSchema(chSh))
-          },
+          () => writeBands(s"${bandsPath(gen)}/seg=0",
+            prevB.join(drop, Seq("id"), "left_anti").unionByName(chB)),
+          () => writeShingles(s"${shinglesPath(gen)}/seg=0",
+            prevS.join(drop, Seq("id"), "left_anti")
+              .unionByName(chSh.select(col("id"), col("sh")))),
           () => writeParamsTable(spark, gen, k, nBands, n))
       }
       graft.util.GenSwap.commit(root, gen)
@@ -240,8 +191,8 @@ object DedupIndex {
    * verified by exact n-gram Jaccard ≥ `threshold` — bit-identical to
    * [[Dedup.minhashPairsAgainst]] over the same corpus/parameters.
    * Only the batch shingles in-plan; the corpus side is two narrow
-   * index-table scans (bands statically pruned to the batch's bucket
-   * dirs — see the isin note in the body; shingles fetched for the
+   * index-table scans (every band row joined on (band, bucket)
+   * against the batch's banded signatures; shingles fetched for the
    * surviving candidate ids only). Equal ids across the two sides are
    * excluded (a doc already in the corpus is not a near-dup of
    * itself). Empty result when no index has committed yet.
@@ -273,32 +224,10 @@ object DedupIndex {
     val bSh = Dedup.shingled(batch, idCol, textCol, nShingle).persist()
     val bB = Dedup.bandedSignatures(
       Dedup.signaturesFromShingled(bSh, k, baseHash), k, nBands)
-      .withColumnRenamed("id", "id_l").persist()
+      .withColumnRenamed("id", "id_l")
     try {
-      val cB = bandsTable(spark, cur)
-        .withColumnRenamed("id", "id_r")
-      val bucketed = cB.columns.contains("__bbucket")
-      // STATIC partition pruning: the batch's distinct bucket-dir set
-      // is ≤ 64 values — collect it from the CACHED batch bands (one
-      // tiny aggregation over in-memory blocks) and filter the scan
-      // explicitly. Deliberately NOT dynamic partition pruning: the
-      // DPP subquery re-executes the batch's whole shingle/sign
-      // pipeline when AQE fails to reuse the broadcast (measured 2×
-      // probe wall at 100× key-growth), while this isin lands in
-      // PartitionFilters for free and prunes identically.
-      val bKeyed = if (bucketed)
-        bB.withColumn("__bbucket",
-          bucketDir(col("bucket")).cast(cB.schema("__bbucket").dataType))
-      else bB
-      val cBpruned = if (bucketed) {
-        val dirs = bKeyed.select(col("__bbucket")).distinct()
-          .collect().map(_.get(0)).toSeq
-        cB.filter(col("__bbucket").isInCollection(dirs))
-      } else cB
-      val keys = if (bucketed) Seq("band", "bucket", "__bbucket")
-        else Seq("band", "bucket")
-      val cands = cBpruned
-        .join(if (broadcastBatch) broadcast(bKeyed) else bKeyed, keys)
+      val cands = bandsTable(spark, cur).withColumnRenamed("id", "id_r")
+        .join(if (broadcastBatch) broadcast(bB) else bB, Seq("band", "bucket"))
         .filter(col("id_l") =!= col("id_r"))
         .select(col("id_l"), col("id_r")).distinct()
       val corpusSh = shinglesTable(spark, cur)
@@ -312,6 +241,6 @@ object DedupIndex {
         .select(col("id_l"), col("id_r"),
           round(col("jaccard"), 6).as("jaccard"))
       verified.localCheckpoint()
-    } finally { bSh.unpersist(); bB.unpersist(); () }
+    } finally { bSh.unpersist(); () }
   }
 }

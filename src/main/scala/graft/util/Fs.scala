@@ -111,39 +111,38 @@ object Fs {
 
   /** Carry an immutable directory tree forward WITHOUT rewriting its
     * bytes where the store allows it: when both ends resolve to a
-    * local filesystem, every file is HARD-LINKED — O(metadata) per
-    * file, zero new bytes on disk, and the link survives deletion of
-    * the source dir — and every directory is created through
-    * `java.nio`, like the links beside it. Elsewhere falls back to
-    * [[copyRec]]: on object stores that is a per-object copy — no
-    * executor re-encode, but O(bytes) through the copier. The
-    * delta-narrowed index refreshes ([[GenIndex.carrySegs]]) use this
-    * to carry untouched segment dirs into a new generation. */
+    * local filesystem, the tree is walked through `java.nio` and
+    * every file is HARD-LINKED — O(metadata) per file, zero new bytes
+    * on disk, and the link survives deletion of the source dir. The
+    * walk sees the `.crc` files that the checksummed filesystem's
+    * listing hides, so a carried file stays verified on read.
+    * Elsewhere falls back to [[copyRec]]: on object stores that is a
+    * per-object copy — no executor re-encode, but O(bytes) through
+    * the copier. The delta-narrowed index refreshes
+    * ([[GenIndex.carrySegs]]) use this to carry untouched segment
+    * dirs into a new generation. */
   def linkOrCopyRec(src: Path, dst: Path): Unit = {
     val sfs = fsOf(src)
     val dfs = fsOf(dst)
     if (!(isLocal(sfs) && isLocal(dfs))) { copyRec(src, dst); return }
-    def walk(s: Path, d: Path): Unit = {
-      val dNio = java.nio.file.Paths.get(d.toUri.getPath)
-      if (sfs.getFileStatus(s).isDirectory) {
-        java.nio.file.Files.createDirectories(dNio)
-        sfs.listStatus(s).foreach(st =>
-          walk(st.getPath, new Path(d, st.getPath.getName)))
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    def walk(s: java.nio.file.Path, d: java.nio.file.Path): Unit =
+      if (Files.isDirectory(s)) {
+        Files.createDirectories(d)
+        val kids = Files.list(s)
+        try kids.forEach(k => walk(k, d.resolve(k.getFileName)))
+        finally kids.close()
       } else {
-        val sNio = java.nio.file.Paths.get(s.toUri.getPath)
-        java.nio.file.Files.deleteIfExists(dNio)
-        try { java.nio.file.Files.createLink(dNio, sNio); () }
+        Files.deleteIfExists(d)
+        try { Files.createLink(d, s); () }
         catch {
           // cross-device / no-hardlink filesystems: fall back per file
           case _: UnsupportedOperationException |
               _: java.nio.file.FileSystemException =>
-            FileUtil.copy(sfs, s, dfs, d,
-              /* deleteSource = */ false, /* overwrite = */ true, conf)
-            ()
+            Files.copy(s, d, StandardCopyOption.REPLACE_EXISTING); ()
         }
       }
-    }
-    walk(src, dst)
+    walk(Paths.get(src.toUri.getPath), Paths.get(dst.toUri.getPath))
   }
   def linkOrCopyRec(src: String, dst: String): Unit =
     linkOrCopyRec(path(src), path(dst))

@@ -18,11 +18,10 @@ import org.apache.spark.sql.types.StructType
  *    are ALWAYS settled before returning — a failure in one write
  *    never leaves the others running detached against an abandoned
  *    generation dir;
- *  - [[partitionValues]] / [[carryUntouched]]: the
+ *  - the segmented (append + tombstone) layout: the
  *    delta-proportional-commit primitive — a refresh Spark-writes
- *    ONLY the `partCol=value` dirs its delta touches and carries
- *    every untouched dir forward via
- *    [[Fs.linkOrCopyRec]] (hard links locally: zero new
+ *    ONLY its delta segment and carries every previous segment
+ *    forward via [[Fs.linkOrCopyRec]] (hard links locally: zero new
  *    bytes; per-object copy on stores without links), so a 0.1%
  *    daily delta stops costing a full-index write volume per commit.
  */
@@ -80,50 +79,13 @@ object GenIndex {
       .foreach(_ => ())
   }
 
-  /** Partition-dir VALUES (the `value` of each `partCol=value` child
-    * dir) present under a dir-partitioned table; empty for flat
-    * layouts and the degenerate empty marker — callers fall back to a
-    * full rewrite there. */
-  def partitionValues(tableDir: String, partCol: String): Seq[String] =
-    Fs.list(tableDir).collect {
-      case st if st.isDirectory &&
-          st.getPath.getName.startsWith(partCol + "=") =>
-        st.getPath.getName.stripPrefix(partCol + "=")
-    }
-
-  /** Carry every partition dir of `prevTable` NOT in `touched` into
-    * `newTable` without a rewrite ([[Fs.linkOrCopyRec]]).
-    * `touched` holds the string forms of the partition values the
-    * refresh Spark-wrote (integer buckets print identically in the
-    * dir name and `String.valueOf`). Returns the carried-dir count.
-    *
-    * NOTE — measured limit (BASELINE.md "Round-18: delta-proportional
-    * refresh COMMITS", 100x-kg): dir-level carry
-    * only pays for TINY deltas. With a bounded dir count (64) any
-    * realistic delta (thousands of rows × hash-distributed buckets)
-    * touches every dir, so the "partial" rewrite degenerates to the
-    * full one. The segmented layout below is the mechanism that
-    * actually makes commit write volume ∝ delta; this helper remains
-    * for bounded-metadata carries. */
-  def carryUntouched(
-      prevTable: String, newTable: String, partCol: String,
-      touched: Set[String]): Int = {
-    val untouched = partitionValues(prevTable, partCol)
-      .filterNot(touched)
-    untouched.foreach { v =>
-      Fs.linkOrCopyRec(
-        s"$prevTable/$partCol=$v", s"$newTable/$partCol=$v")
-    }
-    untouched.size
-  }
-
   // ── segmented (append + tombstone) table layout ─────────────────
   //
   // The delta-proportional COMMIT primitive (the LSM / merge-on-read
   // delete discipline restated for immutable generation dirs):
   //
-  //   table/seg=0/...   the initial build (inner layout unchanged —
-  //   table/seg=1/...   e.g. __bbucket dirs with sorted rows)
+  //   table/seg=0/...   the initial build (inner layout is the
+  //   table/seg=1/...   family's own — e.g. flat sorted files)
   //   table/seg=k/...   each refresh appends ONE delta-sized segment
   //   <sibling tomb>/   (id, tseq) — cumulative dropped-id ledger
   //
@@ -141,18 +103,21 @@ object GenIndex {
   // delta-proportional AMORTIZED (one full write per MaxSegments
   // refreshes), the standard LSM trade.
 
-  /** Segment ordinals present under a segmented table; empty for the
-    * degenerate empty marker (callers fall back to a full rewrite
-    * there). */
+  /** Segment ordinals (the `k` of each `seg=k` child dir) present
+    * under a segmented table; empty for the degenerate empty marker
+    * (callers fall back to a full rewrite there). */
   def segValues(tableDir: String): Seq[Long] =
-    partitionValues(tableDir, "seg").flatMap(_.toLongOption)
+    Fs.list(tableDir).collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith("seg=") =>
+        st.getPath.getName.stripPrefix("seg=")
+    }.flatMap(_.toLongOption)
 
   /** Bound on live segments per table — the compaction trigger. */
   val MaxSegments = 8
 
   /** Read a segmented table's LIVE rows: union the segments, mask by
     * the tombstone ledger, drop the bookkeeping `seg` column (inner
-    * partition columns — `__bbucket` et al. — remain for pruning).
+    * partition columns, where a family has them, remain for pruning).
     * The flat empty marker ([[ensureSegReadable]]) reads through
     * unchanged. The mask join is left unhinted: the ledger is
     * delta × [[MaxSegments]] rows, so Spark's size estimate picks a

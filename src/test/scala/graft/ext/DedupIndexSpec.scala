@@ -83,39 +83,53 @@ class DedupIndexSpec extends SparkSpec {
     assert(got.filter($"id_r" === 31L).count() > 0L)
   }
 
-  test("the candidate join prunes the bands scan to the batch's " +
-      "bucket dirs (STATIC isin on the __bbucket partition column — " +
-      "deliberately not DPP, whose subquery re-ran the batch pipeline)") {
-    val root = tmpDir("didx") + "/idx"
+  test("a probe over a built and twice-refreshed index starts no " +
+      "file-listing job; every segment is a few flat parquet files") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("didx") + "/flat"
     DedupIndex.build(spark, corpus(1L to 400L), root)
+    DedupIndex.refresh(spark, root,
+      Seq(doc(401L), doc(3L, "updated")).toDF("doc_id", "text"),
+      Seq(3L, 9L).toDF("id"))
+    DedupIndex.refresh(spark, root, Seq(doc(402L)).toDF("doc_id", "text"),
+      Seq(11L).toDF("id"))
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    org.apache.spark.GraftBus.drain(sc)
+    sc.addSparkListener(listener)
+    val got = try {
+      val batch = (101L to 110L).map(doc(_)).toDF("doc_id", "text")
+      val rows = DedupIndex.probe(spark, root, batch, threshold = 0.5)
+        .collect()
+      org.apache.spark.GraftBus.drain(sc)
+      rows
+    } finally sc.removeSparkListener(listener)
+    assert(got.nonEmpty)
+    val jobs = descs.asScala.toSeq
+    assert(jobs.nonEmpty)
+    assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs)
+    // the layout that makes it so: flat segments of a few files each
     val cur = graft.util.GenSwap.currentDir(root).get
-    // the probe's candidate join, reconstructed from the same pieces
-    // (the probe itself returns a checkpointed result, whose inner
-    // plan has already executed) — parity with the real path is
-    // pinned by the minhashPairsAgainst test above
-    val batch = (101L to 103L).map(doc(_)).toDF("doc_id", "text")
-    val cB = spark.read.parquet(s"$cur/bands")
-      .withColumnRenamed("id", "id_r")
-    val bBK = Dedup.bandedSignatures(
-      Dedup.signaturesFromShingled(
-        Dedup.shingled(batch, "doc_id", "text", 3), 32, xxhash64(_)),
-      32, 8)
-      .withColumnRenamed("id", "id_l")
-      .withColumn("__bbucket",
-        pmod($"bucket", lit(64L)).cast(cB.schema("__bbucket").dataType))
-      .persist()
-    val dirs = bBK.select($"__bbucket").distinct()
-      .collect().map(_.get(0)).toSeq
-    // a 3-doc batch touches far fewer than the 64 bucket dirs — the
-    // pruning is real, not vacuous
-    assert(dirs.size < 64 && dirs.nonEmpty)
-    val cands = cB.filter($"__bbucket".isInCollection(dirs))
-      .join(broadcast(bBK), Seq("band", "bucket", "__bbucket"))
-    cands.collect()
-    val plan = cands.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [__bbucket"), plan.take(1500))
-    assert(plan.contains("INSET"), plan.take(1500))
-    bBK.unpersist()
+    val maxFiles = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Seq("bands", "shingles").foreach { t =>
+      val segs = graft.util.GenIndex.segValues(s"$cur/$t")
+      assert(segs.sorted === Seq(0L, 1L, 2L), t)
+      segs.foreach { sv =>
+        val kids = Files.list(Paths.get(s"$cur/$t/seg=$sv"))
+          .iterator().asScala.toSeq
+        assert(!kids.exists(Files.isDirectory(_)), s"$t/seg=$sv: $kids")
+        val parquet = kids.count(_.getFileName.toString.endsWith(".parquet"))
+        assert(parquet >= 1 && parquet <= maxFiles, s"$t/seg=$sv: $parquet")
+      }
+    }
   }
 
   test("delta (segment/tombstone) refresh: committed state equals " +

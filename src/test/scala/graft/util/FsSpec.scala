@@ -145,6 +145,34 @@ class FsSpec extends SparkSpec {
     assert(GenSwap.currentGen(root).contains("gen-00000001"))
   }
 
+  test("a DedupIndex delta refresh carries every segment file with its " +
+      ".crc sibling, both hard links of the previous generation's") {
+    def docs(ids: Range) = ids.map(i =>
+      (i.toLong, s"alpha beta gamma delta epsilon id$i")).toDF("doc_id", "text")
+    val root = tmpDir("fs-crc") + "/idx"
+    graft.ext.DedupIndex.build(spark, docs(1 to 40), root)
+    val prev = GenSwap.currentDir(root).get
+    graft.ext.DedupIndex.refresh(spark, root, docs(41 to 44),
+      Seq(3L).toDF("id"))
+    val cur = GenSwap.currentDir(root).get
+    assert(cur !== prev)
+    def ino(p: java.nio.file.Path) = Files.getAttribute(p, "unix:ino")
+    Seq("bands", "shingles").foreach { t =>
+      val (seg, was) =
+        (Paths.get(s"$cur/$t/seg=0"), Paths.get(s"$prev/$t/seg=0"))
+      val data = Files.walk(seg).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      assert(data.nonEmpty, t)
+      data.foreach { f =>
+        val crc = f.resolveSibling(s".${f.getFileName}.crc")
+        assert(Files.exists(crc), s"${seg.relativize(crc)} not carried")
+        Seq(f, crc).foreach(p => assert(
+          ino(p) === ino(was.resolve(seg.relativize(p))),
+          s"${seg.relativize(p)} is not a hard link"))
+      }
+    }
+  }
+
   test("copyRec replicates CONTENTS at dst (not cp-into-dir) and " +
       "overwrites existing files") {
     val root = tmpDir("swap-copy")
