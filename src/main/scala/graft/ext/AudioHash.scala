@@ -295,30 +295,24 @@ object AudioHash {
   // At corpus scale the window-fingerprint table IS the persisted
   // artifact of the Philips design (rows ∝ total duration) — it must
   // not be rebuilt per query. Layout under `root`: parquet rows
-  // (media_id, sample_rate, channels, off, fp, ck) PARTITIONED BY
-  // `bucket = fp mod nBuckets`, so an exact-key probe prunes to the
-  // buckets its clips hit (dynamic partition pruning off the
-  // broadcast clip side). Commit discipline is the VectorIndex
-  // manifest-logged whole-dir swap: stage the full next state, swap
-  // atomically, crash-recover idempotently. Refresh is
-  // ChangeSet-driven: re-fingerprint ONLY the added+updated files,
-  // drop the removed+updated ids — refresh ≡ full rebuild bit-exact,
-  // which the q_audio_clip_incremental oracle certifies. (The COW
-  // rewrite is bucket-partitioned; a delta's fingerprints can touch
-  // any bucket, so at 100 TB the refresh narrows to touched buckets
-  // only when deltas are fingerprint-local — the general path is a
-  // full bucket-parallel rewrite, still one scan + one write.)
+  // (media_id, sample_rate, channels, off, fp, ck) in flat segment
+  // files hash-partitioned and sorted by `fp`, under the
+  // generation-pointer commit ([[graft.util.BucketedSwapIndex]]).
+  // Refresh is ChangeSet-driven: re-fingerprint ONLY the
+  // added+updated files, drop the removed+updated ids — refresh ≡
+  // full rebuild bit-exact, which the q_audio_clip_incremental oracle
+  // certifies.
 
   /** Build (or rebuild) the persisted window-fingerprint index from a
     * media corpus. One fingerprint scan — bytes never shuffle; only
-    * the ~28-byte window rows move into the bucket partitions.
-    * Staging/swap/degenerate-write mechanics live in
-    * [[graft.util.BucketedSwapIndex]] (shared with the video tier). */
+    * the ~28-byte window rows move into the `fp`-keyed segment files.
+    * Staging/swap mechanics live in [[graft.util.BucketedSwapIndex]]
+    * (shared with the video tier). */
   def buildClipIndex(
       spark: org.apache.spark.sql.SparkSession, media: DataFrame,
-      root: String, winLen: Int = 32, buckets: Int = 16): Unit = {
+      root: String, winLen: Int = 32): Unit = {
     graft.util.BucketedSwapIndex.stageAndSwap(
-      root, wavWindowFps(media, winLen).toDF(), col("fp"), buckets)
+      root, wavWindowFps(media, winLen).toDF(), col("fp"))
   }
 
   /** ChangeSet-driven refresh: `changedMedia` (added ∪ updated, with
@@ -332,30 +326,26 @@ object AudioHash {
   def refreshClipIndex(
       spark: org.apache.spark.sql.SparkSession, root: String,
       changedMedia: DataFrame, droppedIds: DataFrame,
-      winLen: Int = 32, buckets: Int = 16): Unit =
+      winLen: Int = 32): Unit =
     graft.util.BucketedSwapIndex.refreshAndSwap(root,
       wavWindowFps(changedMedia, winLen).toDF(),
-      droppedIds.select(col("id")), col("fp"), buckets)
+      droppedIds.select(col("id")), col("fp"))
 
   /** Probe the persisted index with real extracted clips: each clip's
-    * whole-file window key exact-joined against the bucket-partitioned
+    * whole-file window key exact-joined against the persisted
     * corpus index — the [[clipMatches]] semantics served from disk,
     * no corpus re-fingerprinting in the plan.
     *
     * @return (clip_id, src_id, src_offset) */
   def searchClipIndex(
       spark: org.apache.spark.sql.SparkSession, root: String,
-      clips: DataFrame, winLen: Int = 32, buckets: Int = 16): DataFrame = {
+      clips: DataFrame, winLen: Int = 32): DataFrame = {
     val cw = wavWindowFps(clips, winLen).toDF()
       .select(col("media_id").as("clip_id"), col("sample_rate"),
         col("channels"), col("fp"), col("ck"))
-      .withColumn("bucket", pmod(col("fp"), lit(buckets)))
     val ww = graft.util.BucketedSwapIndex.read(spark, root)
-    // broadcast the clip side: the bucket key joins against the
-    // PARTITION column, so dynamic partition pruning narrows the
-    // index scan to the probed buckets
-    ww.join(broadcast(cw),
-        Seq("bucket", "sample_rate", "channels", "fp", "ck"))
+    // broadcast the clip side: the index scan stays shuffle-free
+    ww.join(broadcast(cw), Seq("sample_rate", "channels", "fp", "ck"))
       .select(col("clip_id"), col("media_id").as("src_id"),
         col("off").cast("long").as("src_offset"))
   }

@@ -147,8 +147,7 @@ object DedupIndex {
       if (drop.isEmpty && chSh.isEmpty) return
       val gen = graft.util.GenSwap.nextDir(root)
       val segs = graft.util.GenIndex.segValues(bandsPath(cur))
-      val delta = deltaCommit && segs.nonEmpty &&
-        segs.size < graft.util.GenIndex.MaxSegments
+      val delta = deltaCommit && segs.size < graft.util.GenIndex.MaxSegments
       if (delta) {
         val sv = segs.max + 1
         graft.util.GenIndex.writeAll(

@@ -13,15 +13,18 @@ import org.apache.spark.sql.functions._
  * same lifecycle delta-proportional COMMITS via the shared
  * segment/tombstone layout ([[graft.util.GenIndex]]).
  *
- * Layout under `root/gen-<n>/`:
- *  - `postings/seg=<k>/`  (doc_id, chunk_id, tok, tf) PARTITIONED BY
- *    `__pbucket = pmod(xxhash64(doc_id), 64)` — the UNCAPPED posting
- *    state refreshes retract from (doc-local chunk ids make one
- *    document's postings droppable without touching any other);
- *    masked by `tomb_post/` (dropped doc ids)
- *  - `published/seg=<k>/` (tok, df, rank, chunk_id, tf) PARTITIONED
- *    BY `__tbucket = pmod(xxhash64(tok), 64)` — the capped SERVING
- *    view; a refresh tombstones every TOUCHED token at the new
+ * Layout under `root/gen-<n>/` (every segment flat files,
+ * hash-partitioned and sorted by the table's key —
+ * [[graft.util.GenIndex.writeSegment]]):
+ *  - `postings/seg=<k>/`  (doc_id, chunk_id, tok, tf) keyed by
+ *    `doc_id` — the UNCAPPED posting state refreshes retract from
+ *    (doc-local chunk ids make one document's postings droppable
+ *    without touching any other); masked by `tomb_post/` (dropped
+ *    doc ids)
+ *  - `published/seg=<k>/` (tok, df, rank, chunk_id, tf) keyed by
+ *    `tok` — the capped SERVING view (a token lookup reads the
+ *    sorted files' row-group stats); a refresh tombstones every
+ *    TOUCHED token at the new
  *    segment's ordinal and appends its republished slice there, so
  *    the live view is exactly `carried ∪ republished` (the
  *    [[Assemble.refreshRagIndex]] contract) with delta-sized writes;
@@ -41,8 +44,6 @@ object RagStore {
   private def paramsPath(dir: String) = s"$dir/params"
   private def tombPostPath(dir: String) = s"$dir/tomb_post"
   private def tombPubPath(dir: String) = s"$dir/tomb_pub"
-
-  private val Buckets = 64L
 
   /** LIVE views (segments unioned, tombstones applied). Public: what
     * serving reads and specs inspect. */
@@ -66,14 +67,10 @@ object RagStore {
   }
 
   private def writePostings(segDir: String, p: DataFrame): Unit =
-    p.withColumn("__pbucket", pmod(xxhash64(col("doc_id")), lit(Buckets)))
-      .repartition(col("__pbucket"))
-      .write.partitionBy("__pbucket").parquet(segDir)
+    graft.util.GenIndex.writeSegment(p, segDir, col("doc_id"))
 
   private def writePublished(segDir: String, p: DataFrame): Unit =
-    p.withColumn("__tbucket", pmod(xxhash64(col("tok")), lit(Buckets)))
-      .repartition(col("__tbucket"))
-      .write.partitionBy("__tbucket").parquet(segDir)
+    graft.util.GenIndex.writeSegment(p, segDir, col("tok"))
 
   private def writeParamsTable(
       spark: SparkSession, dir: String, chunkTokens: Int, overlap: Int,
@@ -97,18 +94,8 @@ object RagStore {
     try {
       val pub = Assemble.publishIndex(p, maxPostings, dfCap)
       graft.util.GenIndex.writeAll(
-        () => {
-          writePostings(s"${postingsPath(gen)}/seg=0", p)
-          graft.util.GenIndex.ensureSegReadable(spark,
-            postingsPath(gen), s"${postingsPath(gen)}/seg=0",
-            p.withColumn("__pbucket", lit(0L)).schema)
-        },
-        () => {
-          writePublished(s"${publishedPath(gen)}/seg=0", pub)
-          graft.util.GenIndex.ensureSegReadable(spark,
-            publishedPath(gen), s"${publishedPath(gen)}/seg=0",
-            pub.withColumn("__tbucket", lit(0L)).schema)
-        },
+        () => writePostings(s"${postingsPath(gen)}/seg=0", p),
+        () => writePublished(s"${publishedPath(gen)}/seg=0", pub),
         () => writeParamsTable(spark, gen, chunkTokens, overlap,
           maxPostings, dfCap))
       graft.util.GenSwap.commit(root, gen)
@@ -122,7 +109,9 @@ object RagStore {
     * rows can only change if one of its posting rows moved), and the
     * commit Spark-writes only the delta segment pair + the two
     * ledgers. The committed serving view is bit-identical to a full
-    * rebuild over the post-sync corpus (spec + oracle). */
+    * rebuild over the post-sync corpus (spec + oracle). An empty
+    * change set (no changed docs, no drops) returns without
+    * committing. */
   def refresh(
       spark: SparkSession, root: String, changedDocs: DataFrame,
       droppedIds: DataFrame, idCol: String = "doc_id",
@@ -137,21 +126,17 @@ object RagStore {
     val newPostings = Assemble.ragPostings(changedDocs, idCol, textCol,
       chunkTokens, overlap).persist()
     try {
+      // both frames are cached: an empty refresh is caught before any
+      // generation is staged, at one tiny job for a non-empty one
+      if (drop.isEmpty && newPostings.isEmpty) return
       val prevLive = postingsTable(spark, cur)
-      // dropped rows' toks need only the dropped docs' partition dirs
-      // (a pure function of doc_id — partition-pruned scan per seg)
-      val dropDirs: Seq[Any] = drop
-        .select(pmod(xxhash64(col("doc_id")), lit(Buckets)).as("v"))
-        .distinct().collect().map(_.get(0)).toSeq
-      val droppedRows = prevLive
-        .filter(col("__pbucket").isInCollection(dropDirs))
-        .join(drop, Seq("doc_id"), "left_semi")
+      val droppedRows = prevLive.join(drop, Seq("doc_id"), "left_semi")
       // two consumers (republish filter + the token ledger) over a
-      // pruned-scan ∪ cached-delta plan — cheap enough to leave
+      // semi-joined scan ∪ cached-delta plan — cheap enough to leave
       // unpersisted
       val touched = droppedRows.select(col("tok"))
         .unionByName(newPostings.select(col("tok"))).distinct()
-      val postAfter = prevLive.drop("__pbucket")
+      val postAfter = prevLive
         .join(drop, Seq("doc_id"), "left_anti")
         .unionByName(newPostings)
       val republished = Assemble.publishIndex(
@@ -159,8 +144,7 @@ object RagStore {
         maxPostings, dfCap)
       val gen = graft.util.GenSwap.nextDir(root)
       val segs = graft.util.GenIndex.segValues(postingsPath(cur))
-      if (deltaCommit && segs.nonEmpty &&
-          segs.size < graft.util.GenIndex.MaxSegments) {
+      if (deltaCommit && segs.size < graft.util.GenIndex.MaxSegments) {
         val sv = segs.max + 1
         graft.util.GenIndex.writeAll(
           () => {
@@ -180,23 +164,13 @@ object RagStore {
           () => writeParamsTable(spark, gen, chunkTokens, overlap,
             maxPostings, dfCap))
       } else {
-        // compaction / empty-marker / forced-full: rewrite the live state
-        // as a fresh seg=0 pair, ledgers cleared
+        // compaction / forced-full: rewrite the live state as a fresh
+        // seg=0 pair, ledgers cleared
         val pubAfter = Assemble.publishIndex(postAfter, maxPostings,
           dfCap)
         graft.util.GenIndex.writeAll(
-          () => {
-            writePostings(s"${postingsPath(gen)}/seg=0", postAfter)
-            graft.util.GenIndex.ensureSegReadable(spark,
-              postingsPath(gen), s"${postingsPath(gen)}/seg=0",
-              newPostings.withColumn("__pbucket", lit(0L)).schema)
-          },
-          () => {
-            writePublished(s"${publishedPath(gen)}/seg=0", pubAfter)
-            graft.util.GenIndex.ensureSegReadable(spark,
-              publishedPath(gen), s"${publishedPath(gen)}/seg=0",
-              republished.withColumn("__tbucket", lit(0L)).schema)
-          },
+          () => writePostings(s"${postingsPath(gen)}/seg=0", postAfter),
+          () => writePublished(s"${publishedPath(gen)}/seg=0", pubAfter),
           () => writeParamsTable(spark, gen, chunkTokens, overlap,
             maxPostings, dfCap))
       }

@@ -213,10 +213,9 @@ object TrainedQuality {
   //  - `gen-<n>/feat/seg=<k>/` (id, bucket, cnt, y) — per-doc labeled
   //    features: the retractable state a refresh aggregates for
   //    removed ids (and the only full-corpus-sized table). Each
-  //    segment is PARTITIONED BY `__fbucket = pmod(xxhash64(id), 64)`
-  //    so the retraction reads only the dropped ids' dirs (a pure
-  //    function of id); refreshes APPEND one delta-sized segment and
-  //    mask drops via the `gen-<n>/tomb/` ledger
+  //    segment is flat files hash-partitioned and sorted by `id`
+  //    (GenIndex.writeSegment); refreshes APPEND one delta-sized
+  //    segment and mask drops via the `gen-<n>/tomb/` ledger
   //    (GenIndex.readSegmented) — commit write volume is
   //    delta-proportional like the compute, compacting past
   //    GenIndex.MaxSegments segments
@@ -239,17 +238,8 @@ object TrainedQuality {
     graft.util.GenIndex.readSegmented(
       spark, featPath(genDir), tombPath(genDir))
 
-  /** Fixed feat-table partition-dir count (bounded like every bucket
-    * layout here) and the id→dir function — pure in the id, so a
-    * refresh computes its touched dirs from the delta alone. */
-  private val FeatBuckets = 64L
-  private def featDir(id: org.apache.spark.sql.Column) =
-    pmod(xxhash64(id), lit(FeatBuckets))
-
   private def writeFeat(segDir: String, feat: DataFrame): Unit =
-    feat.withColumn("__fbucket", featDir(col("id")))
-      .repartition(col("__fbucket"))
-      .write.partitionBy("__fbucket").parquet(segDir)
+    graft.util.GenIndex.writeSegment(feat, segDir, col("id"))
 
   /** Stage the four store tables into a generation dir; `stageFeat`
     * writes the (corpus-sized) feature table — full on build,
@@ -320,12 +310,7 @@ object TrainedQuality {
       }
       val gen = graft.util.GenSwap.nextDir(root)
       stageStore(spark, gen,
-        () => {
-          writeFeat(s"${featPath(gen)}/seg=0", feat)
-          graft.util.GenIndex.ensureSegReadable(spark, featPath(gen),
-            s"${featPath(gen)}/seg=0",
-            feat.withColumn("__fbucket", lit(0L)).schema)
-        },
+        () => writeFeat(s"${featPath(gen)}/seg=0", feat),
         rows, np, nn, dim, stopPct)
       graft.util.GenSwap.commit(root, gen)
     } finally { feat.unpersist(); ba.unpersist(); () }
@@ -342,14 +327,12 @@ object TrainedQuality {
     * The feat-table commit is DELTA-PROPORTIONAL (segment/tombstone
     * — [[graft.util.GenIndex]] scaladoc): one delta-sized `seg=<k>`
     * plus the tombstone ledger Spark-write; previous segments
-    * hard-link forward; the retraction aggregate reads ONLY the
-    * dropped ids' `__fbucket` dirs (a pure function of id —
-    * partition-pruned scan per segment). Past
-    * [[graft.util.GenIndex.MaxSegments]] segments the refresh
-    * COMPACTS; `deltaCommit = false` forces the compaction path — the
-    * full-rewrite reference that TrainedQualitySpec's delta test
-    * compares the segmented commit against; the degenerate empty
-    * marker falls back automatically. */
+    * hard-link forward. Past [[graft.util.GenIndex.MaxSegments]]
+    * segments the refresh COMPACTS; `deltaCommit = false` forces the
+    * compaction path — the full-rewrite reference that
+    * TrainedQualitySpec's delta test compares the segmented commit
+    * against. An empty change set (no changed docs, no drops)
+    * returns without committing. */
   def refreshModel(
       spark: org.apache.spark.sql.SparkSession, root: String,
       changedDocs: DataFrame, droppedIds: DataFrame,
@@ -366,20 +349,13 @@ object TrainedQuality {
     val added = ba.select(col("id"), col("bucket"), col("cnt"))
       .join(labelsFrom(ba, stopPct), Seq("id")).persist()
     try {
+      // both frames are cached: an empty refresh is caught before any
+      // generation is staged, at one tiny job for a non-empty one
+      if (drop.isEmpty && ba.isEmpty) return
       val prevLive = featTable(spark, cur)
       val segs = graft.util.GenIndex.segValues(featPath(cur))
-      val delta = deltaCommit && segs.nonEmpty &&
-        segs.size < graft.util.GenIndex.MaxSegments
-      // the retraction aggregate needs only the dropped ids' dirs —
-      // a pure function of id, no scan to find them
-      val retractFrom =
-        if (delta && prevLive.columns.contains("__fbucket")) {
-          val dropDirs: Seq[Any] = drop
-            .select(featDir(col("id")).as("v"))
-            .distinct().collect().map(_.get(0)).toSeq
-          prevLive.filter(col("__fbucket").isInCollection(dropDirs))
-        } else prevLive
-      val removed = retractFrom.join(drop, Seq("id"), "left_semi")
+      val delta = deltaCommit && segs.size < graft.util.GenIndex.MaxSegments
+      val removed = prevLive.join(drop, Seq("id"), "left_semi")
       // retraction and addition counts are independent aggregations
       // over disjoint inputs — overlap them (each already overlaps
       // its own two aggregates internally; this stacks the pairs)
@@ -410,13 +386,9 @@ object TrainedQuality {
             tombPath(gen), drop, sv)
         }
         else () => {
-          val merged = prevLive.drop("__fbucket")
-            .join(drop, Seq("id"), "left_anti")
+          val merged = prevLive.join(drop, Seq("id"), "left_anti")
             .unionByName(added)
           writeFeat(s"${featPath(gen)}/seg=0", merged)
-          graft.util.GenIndex.ensureSegReadable(spark, featPath(gen),
-            s"${featPath(gen)}/seg=0",
-            added.withColumn("__fbucket", lit(0L)).schema)
         }
       stageStore(spark, gen, stageFeat, rows,
         d.getLong(0) - remNp + addNp, d.getLong(1) - remNn + addNn,

@@ -13,11 +13,12 @@ import org.apache.spark.sql.functions._
  * Layout under each generation dir `root/gen-<n>/` (all parquet):
  *  - `centroids/`  (cell, centroid)           — nCells rows
  *  - `codebooks/`  (subspace, code, codeword) — m·k rows
- *  - `corpus/seg=<k>/` (id, codes, vec, cell, __cbucket=…) — each
- *    segment PARTITIONED BY the bounded cell bucket, rows sorted by
- *    cell within (the IVF inverted lists ARE the partition layout);
- *    refreshes APPEND one delta-sized segment and mask drops via the
- *    `tomb/` ledger ([[graft.util.GenIndex.readSegmented]]) — the
+ *  - `corpus/seg=<k>/` (id, codes, vec, cell) — each segment flat
+ *    files hash-partitioned and sorted by `cell` (the IVF inverted
+ *    lists are contiguous row ranges; the file count follows the
+ *    data, not the cell count); refreshes APPEND one delta-sized
+ *    segment and mask drops via the `tomb/` ledger
+ *    ([[graft.util.GenIndex.readSegmented]]) — the
  *    delta-proportional-commit layout, compacted past
  *    [[graft.util.GenIndex.MaxSegments]] segments
  *
@@ -74,44 +75,9 @@ object VectorIndex {
       .repartition(1).write.parquet(codebooksPath(gen))
   }
 
-  /** Fixed count of corpus partition DIRECTORIES. A `partitionBy`
-    * over the raw cell id writes one dir per cell — fine at the
-    * pinned certification cell counts, absurd under occupancy sizing
-    * (nCells ∝ corpus: ~4M dirs at 10⁹ vectors, where dir listing
-    * alone dwarfs the probe). Cells hash into a BOUNDED set of
-    * `__cbucket` dirs instead, with rows SORTED BY `cell` inside each
-    * bucket: dynamic partition pruning narrows the scan to the probed
-    * buckets, and parquet row-group stats on the sorted cell column
-    * prune within them — two-level pruning whose dir count never
-    * grows with the corpus. (pmod keeps small pinned indexes
-    * one-cell-per-dir: nCells ≤ 64 ⇒ bucket == cell.) */
-  private val CorpusBuckets = 64
-
-  private def bucketOfCell(cell: Column): Column =
-    pmod(cell, lit(CorpusBuckets))
-
-  private def writeCorpus(
-      spark: SparkSession, segDir: String, encoded: DataFrame): Unit =
-    encoded.withColumn("__cbucket", bucketOfCell(col("cell")))
-      .repartition(col("__cbucket"))
-      .sortWithinPartitions(col("cell"))
-      .write.partitionBy("__cbucket").parquet(segDir)
-
-  private def stageCorpus(
-      spark: SparkSession, gen: String, encoded: DataFrame): Unit = {
-    writeCorpus(spark, s"${corpusPath(gen)}/seg=0", encoded)
-    // Degenerate (zero-row) corpus: a partitionBy write of an empty
-    // frame leaves no data file to infer a schema from. Detected
-    // driver-side AFTER the single write (a pre-probe of the plan —
-    // the old persist+isEmpty — cost a second partial execution of
-    // the possibly refresh-merged plan); the empty marker then
-    // rewrites flat from an explicit empty frame (no plan
-    // re-execution), with `__cbucket` as a data column — the probe
-    // join handles that identically, it just loses pruning.
-    graft.util.GenIndex.ensureSegReadable(spark, corpusPath(gen),
-      s"${corpusPath(gen)}/seg=0",
-      encoded.withColumn("__cbucket", lit(0)).schema)
-  }
+  private def stageCorpus(gen: String, encoded: DataFrame): Unit =
+    graft.util.GenIndex.writeSegment(encoded, s"${corpusPath(gen)}/seg=0",
+      col("cell"))
 
   /** Stage the REFRESHED corpus into `dir` — DELTA-PROPORTIONAL via
     * the segment/tombstone layout ([[graft.util.GenIndex]] scaladoc):
@@ -122,40 +88,27 @@ object VectorIndex {
     * fresh seg=0 with the ledger cleared. `deltaCommit = false`
     * forces the compaction path — the full-rewrite reference that
     * VectorIndexSpec's delta test compares the segmented commit
-    * against; the degenerate empty-corpus marker falls back
-    * automatically. */
+    * against. */
   private def stageRefreshedCorpus(
       spark: SparkSession, dir: String, prevRoot: String,
-      changedVecs: DataFrame, droppedIds: DataFrame,
-      cents: Seq[Seq[Float]], cbs: Seq[Seq[Seq[Float]]],
-      idCol: String, vecCol: String, deltaCommit: Boolean): Unit = {
-    val prev = corpusAt(spark, prevRoot).drop("__cbucket")
-    // carry EVERY corpus column except the layout bucket — metadata
-    // columns a build declared ride through refreshes; changedVecs
-    // must carry them under the same names
-    val metaCols = prev.columns.toSeq
-      .filterNot(Set("id", "codes", "vec", "cell"))
-    val drop = droppedIds.select(col("id"))
+      changed: DataFrame, drop: DataFrame, deltaCommit: Boolean): Unit = {
     val segs = graft.util.GenIndex.segValues(corpusPath(prevRoot))
-    if (deltaCommit && segs.nonEmpty &&
-        segs.size < graft.util.GenIndex.MaxSegments) {
+    if (deltaCommit && segs.size < graft.util.GenIndex.MaxSegments) {
       val sv = segs.max + 1
       // delta segment and tombstone ledger are independent writes —
       // overlap them (the DedupIndex.refresh writeAll discipline)
       graft.util.GenIndex.writeAll(
         () => {
-          writeCorpus(spark, s"${corpusPath(dir)}/seg=$sv",
-            encode(changedVecs, cents, cbs, idCol, vecCol, metaCols))
+          graft.util.GenIndex.writeSegment(changed,
+            s"${corpusPath(dir)}/seg=$sv", col("cell"))
           graft.util.GenIndex.carrySegs(
             corpusPath(prevRoot), corpusPath(dir))
         },
         () => graft.util.GenIndex.stageTomb(spark, tombPath(prevRoot),
           tombPath(dir), drop, sv))
     } else {
-      val kept = prev.join(drop, Seq("id"), "left_anti")
-      val merged = kept.unionByName(
-        encode(changedVecs, cents, cbs, idCol, vecCol, metaCols))
-      stageCorpus(spark, dir, merged)
+      val kept = corpusAt(spark, prevRoot).join(drop, Seq("id"), "left_anti")
+      stageCorpus(dir, kept.unionByName(changed))
     }
   }
 
@@ -205,7 +158,7 @@ object VectorIndex {
     // writeAll discipline); all settle before the pointer flips
     graft.util.GenIndex.writeAll(
       () => stageModel(spark, gen, cents, cbs),
-      () => stageCorpus(spark, gen, enc))
+      () => stageCorpus(gen, enc))
     graft.util.GenSwap.commit(root, gen)
   }
 
@@ -299,7 +252,8 @@ object VectorIndex {
    * forward. Then the pointer flips. The previous generation stays
    * on disk until the commit after next, so a reader that resolved it
    * mid-refresh keeps a complete, immutable index — zero-downtime
-   * serving (asserted in VectorIndexSpec).
+   * serving (asserted in VectorIndexSpec). An empty change set (no
+   * changed vectors, no drops) returns without committing.
    */
   def refresh(
       spark: SparkSession, root: String, changedVecs: DataFrame,
@@ -317,12 +271,25 @@ object VectorIndex {
             "before refreshing with new vectors")
       return
     }
-    val gen = graft.util.GenSwap.nextDir(root)
-    graft.util.Fs.copyRec(centroidsPath(cur), centroidsPath(gen))
-    graft.util.Fs.copyRec(codebooksPath(cur), codebooksPath(gen))
-    stageRefreshedCorpus(spark, gen, cur,
-      changedVecs, droppedIds, cents, cbs, idCol, vecCol, deltaCommit)
-    graft.util.GenSwap.commit(root, gen)
+    // carry EVERY corpus column — metadata columns a build declared
+    // ride through refreshes; changedVecs must carry them under the
+    // same names
+    val metaCols = corpusAt(spark, cur).columns.toSeq
+      .filterNot(Set("id", "codes", "vec", "cell"))
+    // the drops feed the ledger (or the compaction anti-join) and the
+    // encoded delta the segment write; both are cached, so the
+    // emptiness test below costs a non-empty refresh one tiny job
+    val drop = droppedIds.select(col("id")).persist()
+    val changed = encode(changedVecs, cents, cbs, idCol, vecCol, metaCols)
+      .persist()
+    try {
+      if (drop.isEmpty && changed.isEmpty) return
+      val gen = graft.util.GenSwap.nextDir(root)
+      graft.util.Fs.copyRec(centroidsPath(cur), centroidsPath(gen))
+      graft.util.Fs.copyRec(codebooksPath(cur), codebooksPath(gen))
+      stageRefreshedCorpus(spark, gen, cur, changed, drop, deltaCommit)
+      graft.util.GenSwap.commit(root, gen)
+    } finally { drop.unpersist(); changed.unpersist(); () }
   }
 
   /** Ingest-time SEMANTIC dedup served from the persisted index —
@@ -385,8 +352,7 @@ object VectorIndex {
    */
   /** `broadcastQueries`: the scoring join's strategy for the query
     * side. `true` (default) pins a broadcast — it keeps the corpus
-    * scan shuffle-free and dynamic partition pruning alive, and it
-    * measured 2.2× FASTER than the shuffled join even at a 40k-row
+    * scan shuffle-free, and it measured 2.2× FASTER than the shuffled join even at a 40k-row
     * ingest batch over a 200k corpus (20.7 s vs 46.1 s, BASELINE.md
     * r17). `false` leaves the strategy to Spark/AQE for batches
     * whose exploded (|batch|·nProbe rows × d floats) query side no
@@ -425,20 +391,13 @@ object VectorIndex {
     // must — ADC needs it), but the shortlist WINDOW exchange ships
     // only (q_id, id, adc): the d-dim vectors are projected away
     // before the shuffle and re-joined for the tiny surviving set.
-    // The join key includes the `__cbucket` PARTITION column (dynamic
-    // partition pruning to the probed buckets; row-group stats on the
-    // within-bucket-sorted `cell` prune the rest — the degenerate flat
-    // marker carries it as a data column). ADC per pair via the
-    // native PqAdcScore kernel (identity as in pqTopK:
+    // ADC per pair via the native PqAdcScore kernel (identity as in
+    // pqTopK:
     // Σ_j dot(q_j, cw_{j,code_j}) =
     // dot(q, concat_j cw)) — no per-pair reconstruction array, no
     // interpreted HOF decode.
-    val corpusKeys = corpus.select(col("id"), col("codes"), col("cell"),
-      col("__cbucket"))
-    val qKeyed = q.withColumn("__cbucket", bucketOfCell(col("cell")))
-    val scored = corpusKeys
-      .join(if (broadcastQueries) broadcast(qKeyed) else qKeyed,
-        Seq("cell", "__cbucket"))
+    val scored = corpus.select(col("id"), col("codes"), col("cell"))
+      .join(if (broadcastQueries) broadcast(q) else q, Seq("cell"))
       .filter(col("q_id") =!= col("id"))
       .select(col("q_id"), col("id"),
         graft.functions.GraftFunctions.pq_adc_score(

@@ -206,10 +206,8 @@ object VideoHash {
   // window-key table is the corpus-scale artifact (rows ∝ total
   // frames), so it must refresh from ChangeSet deltas, not rebuild
   // per query. Layout under `root`: parquet rows (media_id, width,
-  // height, off, hi0, lo0, hi1, lo1) PARTITIONED BY
-  // `bucket = hi0 mod nBuckets`; probes carry the same bucket column
-  // so dynamic partition pruning narrows the index scan to the
-  // probed buckets. Commit discipline + degenerate-write handling:
+  // height, off, hi0, lo0, hi1, lo1) in flat segment files
+  // hash-partitioned and sorted by `hi0`. Commit discipline:
   // [[graft.util.BucketedSwapIndex]] (shared with the audio tier).
 
   private def windowKeyRows(media: DataFrame): DataFrame =
@@ -217,12 +215,12 @@ object VideoHash {
 
   /** Build (or rebuild) the persisted window-key index from a media
     * corpus. One hashing scan — bytes never shuffle; only the narrow
-    * key rows move into the bucket partitions. */
+    * key rows move into the `hi0`-keyed segment files. */
   def buildClipIndex(
       spark: org.apache.spark.sql.SparkSession, media: DataFrame,
-      root: String, buckets: Int = 16): Unit = {
+      root: String): Unit = {
     graft.util.BucketedSwapIndex.stageAndSwap(
-      root, windowKeyRows(media), col("hi0"), buckets)
+      root, windowKeyRows(media), col("hi0"))
   }
 
   /** ChangeSet-driven refresh: `changedMedia` (added ∪ updated, with
@@ -235,31 +233,27 @@ object VideoHash {
     * bound). */
   def refreshClipIndex(
       spark: org.apache.spark.sql.SparkSession, root: String,
-      changedMedia: DataFrame, droppedIds: DataFrame,
-      buckets: Int = 16): Unit =
+      changedMedia: DataFrame, droppedIds: DataFrame): Unit =
     graft.util.BucketedSwapIndex.refreshAndSwap(root,
       windowKeyRows(changedMedia), droppedIds.select(col("id")),
-      col("hi0"), buckets)
+      col("hi0"))
 
   /** Probe the persisted index with real extracted clips: each
     * clip's single 2-frame window key exact-joined against the
-    * bucket-partitioned corpus index — the [[clipMatches]] semantics
+    * persisted corpus index — the [[clipMatches]] semantics
     * served from disk, no corpus re-hashing in the plan.
     *
     * @return (clip_id, src_id, src_offset) */
   def searchClipIndex(
       spark: org.apache.spark.sql.SparkSession, root: String,
-      clips: DataFrame, buckets: Int = 16): DataFrame = {
+      clips: DataFrame): DataFrame = {
     val cw = windowKeyRows(clips)
       .select(col("media_id").as("clip_id"), col("width"), col("height"),
         col("hi0"), col("lo0"), col("hi1"), col("lo1"))
-      .withColumn("bucket", pmod(col("hi0"), lit(buckets)))
     val ww = graft.util.BucketedSwapIndex.read(spark, root)
-    // broadcast the clip side: the bucket key joins against the
-    // PARTITION column, so dynamic partition pruning narrows the
-    // index scan to the probed buckets
+    // broadcast the clip side: the index scan stays shuffle-free
     ww.join(broadcast(cw),
-        Seq("bucket", "width", "height", "hi0", "lo0", "hi1", "lo1"))
+        Seq("width", "height", "hi0", "lo0", "hi1", "lo1"))
       .select(col("clip_id"), col("media_id").as("src_id"),
         col("off").cast("long").as("src_offset"))
   }

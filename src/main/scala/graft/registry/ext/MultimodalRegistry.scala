@@ -248,8 +248,8 @@ private[graft] object MultimodalRegistry {
     // final corpus from the luma formula, so any refresh drift
     // (stale windows surviving, dropped rows missing, duplicated
     // ids) hash-mismatches: refresh ≡ full rebuild, bit-exact.
-    // Index: bucket-partitioned by hi0 (mod 16) behind the
-    // manifest-logged swap; probes prune to their buckets. ──
+    // Index: flat segments keyed by hi0 behind the generation
+    // pointer. ──
     "q_video_clip_incremental" -> ((s, dir) => {
       val media = Multimodal.synthesizeY4m(
         s.read.parquet(t(dir, "documents")), "doc_id")
@@ -390,9 +390,7 @@ private[graft] object MultimodalRegistry {
     // corpus from the sample formula, so any refresh drift (stale
     // windows surviving, dropped rows missing, duplicated ids) would
     // hash-mismatch: refresh ≡ full rebuild, bit-exact. Index layout:
-    // bucket-partitioned by fp (mod 16) behind a manifest-logged
-    // whole-dir swap; the probe's bucket key joins the partition
-    // column, so partition pruning narrows the scan. ──
+    // flat segments keyed by fp behind the generation pointer. ──
     "q_audio_clip_incremental" -> ((s, dir) => {
       val media = Multimodal.synthesizeWav(
         s.read.parquet(t(dir, "documents")), "doc_id")

@@ -156,11 +156,10 @@ final case class NodeTarget(
     // no schema-bearing data file (coalesce of an empty RDD has zero
     // partitions), making the next `spark.read.parquet(_dstate)`
     // throw. Detect driver-side and rewrite from an explicit
-    // 1-partition empty frame — the VectorIndex.stageCorpus
-    // convention. (Reachable: every record hard-removed while `auto:`
-    // containers keep the node table itself non-empty.)
+    // 1-partition empty frame. (Reachable: every record hard-removed
+    // while `auto:` containers keep the node table itself non-empty.)
     if (!graft.util.Fs.hasData(s"$staging/_dstate",
-        acceptDirs = false, requireBytes = true)) {
+        requireBytes = true)) {
       graft.util.Fs.deleteRec(s"$staging/_dstate")
       val spark = dstateNext.sparkSession
       spark.createDataFrame(

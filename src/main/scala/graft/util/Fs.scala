@@ -52,18 +52,15 @@ object Fs {
   def list(s: String): Seq[FileStatus] = list(path(s))
 
   /** True iff a Spark write under `dir` produced schema-bearing data:
-    * a `part-` file (non-empty when `requireBytes`), or — for
-    * `partitionBy` layouts when `acceptDirs` — a partition
-    * subdirectory. The degenerate-(zero-row)-write detector shared by
-    * the swap sinks: a coalesce/partitionBy write of an empty frame
+    * a `part-` file (non-empty when `requireBytes`). The
+    * degenerate-write detector of the swap sinks and the tombstone
+    * ledgers: a missing dir, or a coalesced write of an empty frame,
     * can leave NO data file, making the next `spark.read.parquet`
-    * throw, so writers probe and rewrite from an explicit empty frame. */
-  def hasData(dir: String, acceptDirs: Boolean,
-      requireBytes: Boolean = false): Boolean =
+    * throw. */
+  def hasData(dir: String, requireBytes: Boolean = false): Boolean =
     list(dir).exists(st =>
-      (acceptDirs && st.isDirectory) ||
-        (st.getPath.getName.startsWith("part-") &&
-          (!requireBytes || st.getLen > 0)))
+      st.getPath.getName.startsWith("part-") &&
+        (!requireBytes || st.getLen > 0))
 
   /** Stable content fingerprint of a dir's immediate children
     * ((name, size, mtime) triples) — the serving-side model-cache key

@@ -1,19 +1,15 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /**
  * Shared plumbing of the persisted generation-pointer index families
  * ([[graft.ext.VectorIndex]], [[graft.ext.DedupIndex]],
- * [[graft.ext.TrainedQuality]]'s model store, [[BucketedSwapIndex]]),
- * extracted so the stage-tables → guard-empty-writes →
+ * [[graft.ext.RagStore]], [[graft.ext.TrainedQuality]]'s model store,
+ * [[BucketedSwapIndex]]), extracted so the stage-tables →
  * [[GenSwap.commit]] → read-params discipline — and the
  * DELTA-NARROWED refresh commit built on it — lives once:
  *
- *  - [[ensureReadable]]: the zero-row partitionBy-write guard every
- *    family needs (an empty frame leaves no schema-bearing file, so
- *    the next `spark.read.parquet` throws);
  *  - [[writeAll]]: concurrent independent stage-table writes that
  *    are ALWAYS settled before returning — a failure in one write
  *    never leaves the others running detached against an abandoned
@@ -24,23 +20,15 @@ import org.apache.spark.sql.types.StructType
  *    forward via [[Fs.linkOrCopyRec]] (hard links locally: zero new
  *    bytes; per-object copy on stores without links), so a 0.1%
  *    daily delta stops costing a full-index write volume per commit.
+ *
+ * Every segment is FLAT: the family hash-partitions its rows by its
+ * key and sorts them within each file (`repartition(key)
+ * .sortWithinPartitions(key)`, no `partitionBy`), so AQE sizes the
+ * file count from the data, a read lists a segment without a
+ * parallel listing job, and even a zero-row write leaves a
+ * schema-bearing file.
  */
 object GenIndex {
-
-  /** Empty-write guard shared by every persisted table here: a
-    * partitionBy/spread write of a zero-row frame leaves no
-    * schema-bearing file — probe the dir and rewrite a flat empty
-    * marker from an explicit schema (partition columns become data
-    * columns; readers handle that identically, they just lose
-    * pruning). */
-  def ensureReadable(
-      spark: SparkSession, path: String, schema: => StructType): Unit =
-    if (!Fs.hasData(path, acceptDirs = true)) {
-      Fs.deleteRec(path)
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
-        .write.parquet(path)
-    }
 
   /** One-row params table: build parameters ride the committed state
     * so probes and refreshes read them instead of trusting callers to
@@ -84,8 +72,8 @@ object GenIndex {
   // The delta-proportional COMMIT primitive (the LSM / merge-on-read
   // delete discipline restated for immutable generation dirs):
   //
-  //   table/seg=0/...   the initial build (inner layout is the
-  //   table/seg=1/...   family's own — e.g. flat sorted files)
+  //   table/seg=0/...   the initial build (flat files, sorted by
+  //   table/seg=1/...   the family's key)
   //   table/seg=k/...   each refresh appends ONE delta-sized segment
   //   <sibling tomb>/   (id, tseq) — cumulative dropped-id ledger
   //
@@ -104,22 +92,27 @@ object GenIndex {
   // refreshes), the standard LSM trade.
 
   /** Segment ordinals (the `k` of each `seg=k` child dir) present
-    * under a segmented table; empty for the degenerate empty marker
-    * (callers fall back to a full rewrite there). */
+    * under a segmented table. */
   def segValues(tableDir: String): Seq[Long] =
     Fs.list(tableDir).collect {
       case st if st.isDirectory && st.getPath.getName.startsWith("seg=") =>
         st.getPath.getName.stripPrefix("seg=")
     }.flatMap(_.toLongOption)
 
+  /** Write one segment the one way every family does: rows
+    * hash-partitioned by `key` into flat files, sorted by it within
+    * each (parquet row-group stats on the sorted key then skip what a
+    * keyed read does not need). */
+  def writeSegment(rows: DataFrame, segDir: String, key: Column*): Unit =
+    rows.repartition(key: _*).sortWithinPartitions(key: _*)
+      .write.parquet(segDir)
+
   /** Bound on live segments per table — the compaction trigger. */
   val MaxSegments = 8
 
   /** Read a segmented table's LIVE rows: union the segments, mask by
-    * the tombstone ledger, drop the bookkeeping `seg` column (inner
-    * partition columns, where a family has them, remain for pruning).
-    * The flat empty marker ([[ensureSegReadable]]) reads through
-    * unchanged. The mask join is left unhinted: the ledger is
+    * the tombstone ledger, drop the bookkeeping `seg` column. The
+    * mask join is left unhinted: the ledger is
     * delta × [[MaxSegments]] rows, so Spark's size estimate picks a
     * broadcast for the normal case without pinning one on a
     * backfill-sized ledger. */
@@ -128,8 +121,7 @@ object GenIndex {
       idCol: String = "id"): DataFrame = {
     import org.apache.spark.sql.functions._
     val data = spark.read.parquet(tableDir)
-    if (!data.columns.contains("seg")) return data
-    if (!Fs.hasData(tombDir, acceptDirs = true)) return data.drop("seg")
+    if (!Fs.hasData(tombDir)) return data.drop("seg")
     val maxT = spark.read.parquet(tombDir)
       .groupBy(col("id")).agg(max(col("tseq")).as("__tseq"))
       .withColumnRenamed("id", idCol)
@@ -156,22 +148,9 @@ object GenIndex {
     import org.apache.spark.sql.functions._
     val cur = drops.select(col("id"), lit(k).as("tseq"))
     val merged =
-      if (Fs.hasData(prevTombDir, acceptDirs = true))
+      if (Fs.hasData(prevTombDir))
         spark.read.parquet(prevTombDir).unionByName(cur)
       else cur
     merged.repartition(1).write.parquet(newTombDir)
   }
-
-  /** Empty-write guard for a segmented BUILD: if the freshly-written
-    * seg dir holds no data, replace the whole table with a flat
-    * schema-bearing marker (readers then take the flat path). */
-  def ensureSegReadable(
-      spark: SparkSession, tableDir: String, segDir: String,
-      schema: => StructType): Unit =
-    if (!Fs.hasData(segDir, acceptDirs = true)) {
-      Fs.deleteRec(tableDir)
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
-        .write.parquet(tableDir)
-    }
 }

@@ -39,19 +39,24 @@ class RegistrySpec extends SparkSpec {
     } finally graft.registry.Shared.verifySfDir = prev
   }
 
+  /** Every main Scala source, read from the test cwd. */
+  private def mainSources(): List[java.nio.file.Path] = {
+    val walk = java.nio.file.Files.walk(
+      java.nio.file.Paths.get("src/main/scala"))
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .toList
+      finally walk.close()
+    assert(files.size > 50, "main sources not found from the test cwd")
+    files
+  }
+
   test("main code reads no environment variable outside the deployment " +
       "and Bench-budget allow-list") {
     val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
       "SPARK_GRAFT_REPLAY_TIMEOUT_MS", "GRAFT_BENCH_WARMUP_BUDGET_S",
       "GRAFT_BENCH_ATTEMPT2_BUDGET_S", "GRAFT_BENCH_DEGRADE_BUDGET_S")
-    val files = {
-      val walk = java.nio.file.Files.walk(
-        java.nio.file.Paths.get("src/main/scala"))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .toList
-      finally walk.close()
-    }
-    assert(files.size > 50, "main sources not found from the test cwd")
+    val files = mainSources()
     val read = "(sys\\.env|System\\.getenv)".r
     val envName = "\"([A-Z][A-Z0-9]*_[A-Z0-9_]+)\"".r
     // in a file that reads the environment, every quoted env-style
@@ -62,6 +67,20 @@ class RegistrySpec extends SparkSpec {
       else envName.findAllMatchIn(text).map(_.group(1))
         .filterNot(allowed).map(n => s"${f.getFileName}: $n").toList
     }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("every GenIndex family writes flat segments: no main source that " +
+      "reads or carries segments also writes with partitionBy") {
+    val segmented = "GenIndex\\.(carrySegs|readSegmented)".r
+    // `.write`, any option/mode calls, then `.partitionBy(` — not the
+    // window-spec `Window.partitionBy(`
+    val dirWrite = "\\.write(\\s*\\.\\w+\\([^)]*\\))*\\s*\\.partitionBy\\(".r
+    val offenders = mainSources().filter { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      segmented.findFirstIn(text).nonEmpty &&
+        dirWrite.findFirstIn(text).nonEmpty
+    }.map(_.getFileName.toString)
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
 }

@@ -29,4 +29,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Every path under `root` (relative) with its millisecond mtime —
+    * equal before and after a call iff the call wrote nothing there. */
+  def treeMtimes(root: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(r)
+    try walk.iterator().asScala.map(p => r.relativize(p).toString ->
+      java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
+    finally walk.close()
+  }
 }

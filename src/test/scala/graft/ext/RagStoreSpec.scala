@@ -92,6 +92,27 @@ class RagStoreSpec extends SparkSpec {
     assert(viewRows(root) === viewRows(rootF))
   }
 
+  test("an empty refresh commits nothing: generation, segments, files " +
+      "and serving view unchanged") {
+    val root = tmpDir("rag") + "/noop"
+    RagStore.build(spark, corpus(1L to 20L), root)
+    RagStore.refresh(spark, root, Seq(doc(21L)).toDF("doc_id", "text"),
+      Seq("2").toDF("id")) // a delta segment pair and two ledgers
+    val gen = graft.util.GenSwap.currentGen(root)
+    val dir = graft.util.GenSwap.currentDir(root).get
+    val segs = graft.util.GenIndex.segValues(s"$dir/published")
+    val before = treeMtimes(root)
+    val served = viewRows(root)
+    Thread.sleep(20) // a rewrite would move the millisecond mtimes
+    RagStore.refresh(spark, root,
+      Seq.empty[(String, String)].toDF("doc_id", "text"),
+      Seq.empty[String].toDF("id"))
+    assert(graft.util.GenSwap.currentGen(root) === gen)
+    assert(graft.util.GenIndex.segValues(s"$dir/published") === segs)
+    assert(treeMtimes(root) === before)
+    assert(viewRows(root) === served)
+  }
+
   test("uncommitted root fails loudly; empty corpus builds a " +
       "readable (empty) store") {
     val none = tmpDir("rag") + "/none"

@@ -145,6 +145,28 @@ class TrainedQualitySpec extends SparkSpec {
     assert(links.count(_ == 1) > 0, "no freshly-written feat dirs")
   }
 
+  test("an empty refreshModel commits nothing: generation, segments, " +
+    "files and scores unchanged") {
+    val root = tmpDir("qm") + "/noop"
+    TrainedQuality.buildModel(spark, docs(40), root)
+    TrainedQuality.refreshModel(spark, root,
+      docs(42).filter(col("doc_id") >= 40), Seq(3L).toDF("id"))
+    val gen = graft.util.GenSwap.currentGen(root)
+    val featDir = s"${graft.util.GenSwap.currentDir(root).get}/feat"
+    val segs = graft.util.GenIndex.segValues(featDir)
+    val before = treeMtimes(root)
+    def scores() = TrainedQuality.scoreFromStore(spark, root, docs(10))
+      .collect().map(_.toSeq).toSet
+    val scored = scores()
+    Thread.sleep(20) // a rewrite would move the millisecond mtimes
+    TrainedQuality.refreshModel(spark, root, docs(0),
+      Seq.empty[Long].toDF("id"))
+    assert(graft.util.GenSwap.currentGen(root) === gen)
+    assert(graft.util.GenIndex.segValues(featDir) === segs)
+    assert(treeMtimes(root) === before)
+    assert(scores() === scored)
+  }
+
   test("refreshModel and readStore on an uncommitted root fail " +
     "loudly instead of serving an empty model") {
     val root = tmpDir("qm") + "/none"

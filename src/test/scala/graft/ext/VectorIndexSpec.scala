@@ -157,32 +157,61 @@ class VectorIndexSpec extends SparkSpec {
     assert(graft.util.Fs.exists(s"$root/gen-00000000")) // reader gen
   }
 
-  test("bucketed corpus layout: more cells than bucket dirs shares " +
-    "dirs (bounded dir count at ANY nCells) and probes still equal " +
-    "brute force at total coverage") {
+  test("flat corpus layout: at 100 cells every segment is 1 to " +
+    "shuffle.partitions parquet files and no subdirectory, and probes " +
+    "still equal brute force at total coverage") {
     val corpus = vecs(1L to 300L)
     val root = tmpDir("vidx") + "/bidx"
-    // 100 cells > the 64 fixed bucket dirs ⇒ buckets must share
     VectorIndex.build(spark, corpus, root, nCells = 100, m = 4, k = 8)
-    val gen = graft.util.GenSwap.currentDir(root).get
-    val dirs = graft.util.Fs.list(s"$gen/corpus/seg=0")
-      .filter(_.isDirectory).map(_.getPath.getName)
-    assert(dirs.nonEmpty && dirs.forall(_.startsWith("__cbucket=")))
-    assert(dirs.size <= 64, s"expected <= 64 bucket dirs, got ${dirs.size}")
+    def assertFlat(segs: Seq[Long]): Unit = {
+      val corpusDir = s"${graft.util.GenSwap.currentDir(root).get}/corpus"
+      val maxFiles = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      assert(graft.util.GenIndex.segValues(corpusDir).sorted === segs)
+      segs.foreach { sv =>
+        val kids = graft.util.Fs.list(s"$corpusDir/seg=$sv")
+        assert(!kids.exists(_.isDirectory), s"seg=$sv: $kids")
+        val parquet = kids.count(_.getPath.getName.endsWith(".parquet"))
+        assert(parquet >= 1 && parquet <= maxFiles, s"seg=$sv: $parquet")
+      }
+    }
+    assertFlat(Seq(0L))
     val q = corpus.filter(col("vec_id") % 50 === 0)
     val got = VectorIndex.probe(spark, root, q, 3, nProbe = 100,
       shortlist = 300)
     assert(top(got) === top(Similarity.bruteForceTopK(corpus, q, 3)))
-    // refresh over the bucketed layout keeps the layout + answers.
+    // a refresh appends one more flat segment and keeps the answers.
     // vecs() has period 13, so vec 50 has ~23 exact twins already in
     // the corpus that win the id tie-break — k=30 is wide enough that
     // the added twin 1050 (cosine 1.0, largest twin id) must appear
     val twin = corpus.filter(col("vec_id") === 50)
       .select(lit(1050L).as("vec_id"), col("embedding"))
     VectorIndex.refresh(spark, root, twin, Seq(51L).toDF("id"))
+    assertFlat(Seq(0L, 1L))
     val after = top(VectorIndex.probe(spark, root, q, 30, 100, 300))
     assert(after.exists { case (qi, ni, _, _) => qi == 50L && ni == 1050L })
     assert(!after.exists(_._2 == 51L))
+  }
+
+  test("an empty refresh commits nothing: generation, segments, files " +
+    "and probe answers unchanged") {
+    val corpus = vecs(1L to 60L)
+    val root = tmpDir("vidx") + "/empty"
+    VectorIndex.build(spark, corpus, root, nCells = 4, m = 4, k = 8)
+    VectorIndex.refresh(spark, root, vecs(Seq(61L)), Seq(2L).toDF("id"))
+    val gen = graft.util.GenSwap.currentGen(root)
+    val corpusDir = s"${graft.util.GenSwap.currentDir(root).get}/corpus"
+    val segs = graft.util.GenIndex.segValues(corpusDir)
+    val before = treeMtimes(root)
+    val q = corpus.filter(col("vec_id") % 10 === 0)
+    val probed = top(VectorIndex.probe(spark, root, q, 3, 4, 60))
+    assert(probed.nonEmpty)
+    Thread.sleep(20) // a rewrite would move the millisecond mtimes
+    VectorIndex.refresh(spark, root, corpus.limit(0),
+      Seq.empty[Long].toDF("id"))
+    assert(graft.util.GenSwap.currentGen(root) === gen)
+    assert(graft.util.GenIndex.segValues(corpusDir) === segs)
+    assert(treeMtimes(root) === before)
+    assert(top(VectorIndex.probe(spark, root, q, 3, 4, 60)) === probed)
   }
 
   test("buildAuto sizes cells from the corpus (floor for tiny inputs, " +

@@ -2,9 +2,10 @@ package graft.util
 
 import graft.SparkSpec
 
-/** The bucket-partitioned index layout under the generation-pointer
+/** The key-bucketed index layout under the generation-pointer
   * commit: orphaned gen dirs are never served; segment/tombstone
-  * refreshes equal a rebuild; in-flight readers survive a refresh. */
+  * refreshes equal a rebuild; an empty refresh commits nothing;
+  * in-flight readers survive a refresh. */
 class BucketedSwapIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,7 +17,7 @@ class BucketedSwapIndexSpec extends SparkSpec {
     assert(BucketedSwapIndex.resolve(root) === None)
     // a successful build lands PAST the orphan and prunes it
     BucketedSwapIndex.stageAndSwap(root,
-      Seq((7L, 70L)).toDF("fp", "payload"), $"fp", 4)
+      Seq((7L, 70L)).toDF("fp", "payload"), $"fp")
     assert(BucketedSwapIndex.resolve(root).get.endsWith("gen-00000001"))
     assert(BucketedSwapIndex.read(spark, root).count() === 1L)
   }
@@ -28,10 +29,10 @@ class BucketedSwapIndexSpec extends SparkSpec {
       ids.map(i => (s"m$i", (i * 7) % 16, v))
         .toDF("media_id", "fp", "payload")
     val root = tmpDir("bsi-delta") + "/idx"
-    BucketedSwapIndex.stageAndSwap(root, rows(1L to 20L, 0L), $"fp", 4)
+    BucketedSwapIndex.stageAndSwap(root, rows(1L to 20L, 0L), $"fp")
     // drop m3 + m4, RE-ADD m3 with payload 1, add m21 — in one refresh
     BucketedSwapIndex.refreshAndSwap(root, rows(Seq(3L, 21L), 1L),
-      Seq("m3", "m4").toDF("id"), $"fp", 4)
+      Seq("m3", "m4").toDF("id"), $"fp")
     val live = BucketedSwapIndex.read(spark, root)
       .select($"media_id", $"payload")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -55,7 +56,7 @@ class BucketedSwapIndexSpec extends SparkSpec {
     (1 to extra).foreach { i =>
       BucketedSwapIndex.refreshAndSwap(root,
         rows(Seq(100L + i), 2L), Seq.empty[String].toDF("id"),
-        $"fp", 4)
+        $"fp")
     }
     val segsNow = GenIndex.segValues(
       s"${BucketedSwapIndex.resolve(root).get}/table")
@@ -67,15 +68,41 @@ class BucketedSwapIndexSpec extends SparkSpec {
       (1 to extra).map(i => s"m${100 + i}").toSet)
   }
 
+  test("an empty refreshAndSwap commits nothing: generation, segments, " +
+      "files and live rows unchanged") {
+    val root = tmpDir("bsi-empty") + "/idx"
+    val rows = (1L to 20L).map(i => (s"m$i", i % 16, 0L))
+      .toDF("media_id", "fp", "payload")
+    BucketedSwapIndex.stageAndSwap(root, rows, $"fp")
+    BucketedSwapIndex.refreshAndSwap(root,
+      Seq(("m21", 5L, 1L)).toDF("media_id", "fp", "payload"),
+      Seq("m2").toDF("id"), $"fp") // a delta segment and a ledger
+    val gen = GenSwap.currentGen(root)
+    val segs = GenIndex.segValues(s"${GenSwap.currentDir(root).get}/table")
+    val before = treeMtimes(root)
+    def live() = BucketedSwapIndex.read(spark, root)
+      .select($"media_id", $"payload").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val served = live()
+    Thread.sleep(20) // a rewrite would move the millisecond mtimes
+    BucketedSwapIndex.refreshAndSwap(root,
+      rows.limit(0), Seq.empty[String].toDF("id"), $"fp")
+    assert(GenSwap.currentGen(root) === gen)
+    assert(GenIndex.segValues(
+      s"${GenSwap.currentDir(root).get}/table") === segs)
+    assert(treeMtimes(root) === before)
+    assert(live() === served)
+  }
+
   test("a reader holding the previous generation survives one " +
       "concurrent commit") {
     val root = tmpDir("bsi-reader") + "/idx"
     BucketedSwapIndex.stageAndSwap(root,
-      Seq((1L, 10L)).toDF("fp", "payload"), $"fp", 4)
+      Seq((1L, 10L)).toDF("fp", "payload"), $"fp")
     val gen1 = BucketedSwapIndex.resolve(root).get
     val oldReader = spark.read.parquet(s"$gen1/table").select($"fp")
     BucketedSwapIndex.stageAndSwap(root,
-      Seq((2L, 20L)).toDF("fp", "payload"), $"fp", 4)
+      Seq((2L, 20L)).toDF("fp", "payload"), $"fp")
     assert(oldReader.as[Long].collect().toSet === Set(1L))
     assert(BucketedSwapIndex.read(spark, root)
       .select($"fp").as[Long].collect().toSet === Set(2L))

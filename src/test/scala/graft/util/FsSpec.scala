@@ -221,19 +221,13 @@ class FsSpec extends SparkSpec {
       "writes; fingerprint changes when a dir's contents change") {
     val root = tmpDir("fs-hasdata")
     val d = s"$root/out"
-    assert(!Fs.hasData(d, acceptDirs = true)) // missing dir
+    assert(!Fs.hasData(d)) // missing dir
     Seq(("a", 1)).toDF("id", "v").repartition(1)
       .write.parquet(d)
-    assert(Fs.hasData(d, acceptDirs = false, requireBytes = true))
+    assert(Fs.hasData(d, requireBytes = true))
     val fp1 = Fs.fingerprint(d)
     Seq(("a", 1), ("b", 2)).toDF("id", "v").repartition(1)
       .write.mode("overwrite").parquet(d)
     assert(Fs.fingerprint(d) !== fp1)
-    // partitionBy layout: data lives in subdirs — acceptDirs sees it
-    val pd = s"$root/part"
-    Seq(("a", 1)).toDF("id", "bucket")
-      .write.partitionBy("bucket").parquet(pd)
-    assert(Fs.hasData(pd, acceptDirs = true))
-    assert(!Fs.hasData(pd, acceptDirs = false, requireBytes = true))
   }
 }
