@@ -32,13 +32,11 @@ final case class ChangeSet(
   /** Materialize the shared join ONCE with lineage truncated
     * (`localCheckpoint`) and rebuild every branch over the snapshot.
     * A plain `persist()` is not enough for sinks: the commit swaps
-    * the very state files the join's subtree scans (and refreshes /
-    * re-registers the bucketed FileTarget's catalog entry, which
-    * re-caches every dependent cached plan) — a post-commit
+    * the very state files the join's subtree scans — a post-commit
     * evaluation of a persisted-but-invalidated branch would re-diff
     * against the NEW state and hand listeners empty phase payloads.
     * The checkpoint pins the diff's rows independent of the state
-    * files/catalog. LAZY (`eager = false`): the first action — the
+    * files. LAZY (`eager = false`): the first action — the
     * sink's single [[counts]] job, which always runs BEFORE the
     * commit — materializes the blocks, so the checkpoint costs the
     * same one cache-fill job `persist()` paid, not an extra eager

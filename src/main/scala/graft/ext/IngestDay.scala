@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
  *     persisted vector index ([[VectorIndex.dedupIngest]]) — top-1
  *     round-6 cosine ≥ 0.4 against the indexed corpus drops the row;
  *  5. ChangeSet diff + SINK APPLY: the desired state (kept ∪ updated
- *     ∪ ingested survivors) syncs into the bucketed file sink through
+ *     ∪ ingested survivors) syncs into the flat file sink through
  *     the full [[graft.pipeline.ImportService]] orchestration (key →
  *     one-join diff → add/update/remove apply);
  *  6. BOTH index refreshes and the trained-model refresh run from the
@@ -66,8 +66,7 @@ object IngestDay {
     // calls them sequentially; overlapping fills each build's
     // straggler tail with the next build's tasks). All settle before
     // the gates run (GenIndex.writeAll rethrows the first failure).
-    val target = graft.targets.FileTarget(s"$workDir/state",
-      buckets = s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val target = graft.targets.FileTarget(s"$workDir/state")
     graft.util.GenIndex.writeAll(
       () => DedupIndex.build(s, evens, didx, k = 32, bands = 8, n = 3,
         idCol = "doc_id", textCol = "text", baseHash = hash),
@@ -152,18 +151,12 @@ object IngestDay {
           deleted.select(col("doc_id").as("id"))),
         () => TrainedQuality.refreshModel(s, qm, changedText,
           droppedTextIds))
-      // an all-empty sync never materializes the partitioned state, so
-      // the snapshot may come back with the minimal (id, version)
-      // schema — project the declared columns stably either way (the
-      // q_sync_incremental convention)
-      val st = target.currentState(s)
-      def sc(n: String, tpe: String) =
-        (if (st.columns.contains(n)) col(n) else lit(null).cast(tpe))
-      val sink = st.select(
-        sc("id", "string").cast(d.schema("doc_id").dataType)
-          .as("doc_id"),
-        sc("version", "long").cast("long").as("version"),
-        sc("len_chars", "long").cast("long").as("len_chars"))
+      // the seeded state carries every column, even at zero rows (a
+      // flat write of an empty frame leaves a schema-bearing file)
+      val sink = target.currentState(s).select(
+        col("id").cast(d.schema("doc_id").dataType).as("doc_id"),
+        col("version").cast("long").as("version"),
+        col("len_chars").cast("long").as("len_chars"))
 
       // ── 7. read back through the refreshed states ──
       val (model, dim) = TrainedQuality.readStore(s, qm)

@@ -107,8 +107,7 @@ object PresetFactory {
       .has("numPartitions", "integer"))
 
   val targetSchemas: Map[String, OptionsSchema] = Map(
-    "file" -> OptionsSchema().requires("path", "string")
-      .has("partitions", "integer"),
+    "file" -> OptionsSchema().requires("path", "string"),
     "jdbc" -> OptionsSchema().requires("url", "string")
       .requires("table", "string").has("batchSize", "integer"),
     "node" -> OptionsSchema().requires("path", "string")
@@ -170,9 +169,7 @@ object PresetFactory {
     if (errors.nonEmpty)
       throw ConfigException(s"Invalid target options: ${errors.mkString("; ")}")
     tpe match {
-      case "file" => FileTarget(options("path").toString,
-        partitions = options.get("partitions").map(_.toString.toInt)
-          .getOrElse(0))
+      case "file" => FileTarget(options("path").toString)
       case "jdbc" => JdbcTarget(options("url").toString,
         options("table").toString,
         batchSize = options.get("batchSize").map(_.toString.toInt)

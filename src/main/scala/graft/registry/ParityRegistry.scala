@@ -154,19 +154,9 @@ private[graft] object ParityRegistry {
     // added rows (k%7=0) carry real payload, updated rows (k%3=0,
     // strictly-newer version) get re-mapped payload, untouched
     // survivors keep the marker, removed ids (k%10=0) are gone.
-    // State is a BUCKETED table on id (murmur bucketBy + catalog
-    // registration): the diff's full-outer join consumes the
-    // bucketing, so only the incoming source side exchanges — at
-    // 100 TB the state is the big side, and this halves the sync's
-    // shuffle volume (plan pinned by PipelineSpec's bucketed-state
-    // test; oracle unchanged).
     "q_sync_apply" -> ((s, dir) => {
       val path = tempStateDir() + "/state"
-      // bucket count == session shuffle partitions: the source side's
-      // dedup exchange already partitions on __id at that count, so
-      // the diff join reuses it — ONE exchange in the whole diff
-      val target = FileTarget(path,
-        buckets = s.conf.get("spark.sql.shuffle.partitions").toInt)
+      val target = FileTarget(path)
       target.writeState(s,
         graft.util.Tables.spread(s.read.parquet(t(dir, "orders")))
           .filter(col("o_orderkey") % 7 =!= 0)
@@ -184,8 +174,6 @@ private[graft] object ParityRegistry {
         idAttribute = "id",
         versionAttribute = Some("version"))
       new ImportService(preset).importData(s)
-      // read back through the catalog entry — schema-safe even for a
-      // zero-row state (no parquet footer to infer from)
       target.currentState(s).select(col("id"),
         col("version").cast("long"),
         col("total_cents").cast("long"), col("status"))
@@ -195,7 +183,7 @@ private[graft] object ParityRegistry {
     // replayed as 4 ts-ordered micro-batches through
     // IncrementalSync.start — a file-source stream whose every
     // micro-batch runs the full keying → diff → apply cycle against
-    // a partitioned FileTarget (skipRemovedRecords: a micro-batch is
+    // a FileTarget (skipRemovedRecords: a micro-batch is
     // a delta, not a snapshot). The version rule (strict > update;
     // in-batch last-wins BY VERSION) makes the final merged state
     // independent of where the batch boundaries fall, so the oracle
@@ -207,7 +195,7 @@ private[graft] object ParityRegistry {
       val preset = Preset(
         source = InlineSource(_ =>
           sys.error("unused — the stream feeds the batches")),
-        target = FileTarget(s"$work/state", partitions = 8),
+        target = FileTarget(s"$work/state"),
         mapper = Mapper(Seq(
           "event_type" -> "event_type",
           "value_cents" -> "value_cents")),
@@ -220,10 +208,9 @@ private[graft] object ParityRegistry {
         col("ts"))
       val state = graft.streaming.IncrementalSync
         .replaySync(s, ev, "ts", preset, work, nBatches = 4)
-      // an all-empty replay never materializes the partitioned state
-      // (zero-row partitionBy writes no files), so the snapshot comes
-      // back with the minimal (id, version) schema — project the
-      // declared output schema stably either way
+      // an all-empty replay may commit no state at all, so the
+      // snapshot can come back with the minimal (id, version) schema —
+      // project the declared output schema stably either way
       def c(name: String, tpe: String): Column =
         (if (state.columns.contains(name)) col(name)
          else lit(null).cast(tpe)).as(name)

@@ -37,11 +37,8 @@ import org.apache.spark.sql.functions._
  * pattern as [[FileTarget]] — the close/open delta is the sync's
  * changed-id set (small vs the table), joined against history with
  * the strategy left to AQE (broadcast for the typical tiny delta,
- * shuffle for an update-heavy backfill); at 100 TB the history partitions
- * by id hash exactly like FileTarget's `partitions` mode and only
- * touched partitions rewrite (the same O(touched) argument —
- * deliberately not duplicated here; this target certifies the
- * HISTORY semantics, the layout tiers are FileTarget's).
+ * shuffle for an update-heavy backfill). Like FileTarget, it rewrites
+ * the whole snapshot on each sync.
  */
 final case class Scd2Target(
     path: String,

@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   * is warmed once on q1_agg. Each rep clears the cache and forces the
   * query with `count()`, as `Bench.timeOnce` does, so a solo re-time
   * compares with its bench row. One line per query reports the best
-  * rep's wall, rows, jobs, executor CPU, shuffle read/write and spill
-  * bytes; `--explain` also prints the timed frame's formatted plan. */
+  * rep's wall, the min/median/max wall over all reps, and the best
+  * rep's rows, jobs, executor CPU, shuffle read/write and spill bytes;
+  * `--explain` also prints the timed frame's formatted plan. */
 object Prof {
 
   /** What the jobs between two [[Collector.take]]s cost. */
@@ -81,14 +82,19 @@ object Prof {
     val collector = new Collector(spark)
     graft.SparkEntry.queries("q1_agg")(spark, dir).count()
     names.foreach { name =>
-      val (secs, (df, rows), c) = (1 to reps).map { _ =>
+      val runs = (1 to reps).map { _ =>
         spark.catalog.clearCache()
         measure(collector) {
           val df = graft.SparkEntry.queries(name)(spark, dir)
           (df, df.count())
         }
-      }.minBy(_._1)
-      println(f"[prof] $name%-24s best=$secs%7.2fs rows=$rows jobs=${c.jobs} " +
+      }.sortBy(_._1)
+      val (secs, (df, rows), c) = runs.head
+      val walls = runs.map(_._1)
+      val median = (walls((reps - 1) / 2) + walls(reps / 2)) / 2
+      println(f"[prof] $name%-24s best=$secs%7.2fs " +
+        f"wall=${walls.head}%.2f/$median%.2f/${walls.last}%.2fs " +
+        f"rows=$rows jobs=${c.jobs} " +
         f"cpu=${c.cpuS}%.2fs shuffle_read=${c.shuffleReadBytes}B " +
         f"shuffle_write=${c.shuffleWriteBytes}B spill=${c.spillBytes}B")
       // the timed frame, not a rebuilt one: rebuilding would re-run any

@@ -48,19 +48,15 @@ object Tables {
   /** Session defaults shared by Verify / Bench / tests.
     *
     * `shuffle.partitions` matches the core count — the gate-SF
-    * posture, and the number BUCKETED state tables are created at
-    * (their diff joins consume the bucketing only when the bucket
-    * count satisfies the join's expected partitioning; a larger
-    * global initial number makes the planner disable the bucketed
-    * scan and re-exchange the state side, PipelineSpec pins this).
-    * AQE's initial partition number, the parquet codec and the
-    * shuffled-hash-join local-map threshold are Spark's own defaults
-    * (initial = `shuffle.partitions`, snappy, 0 — PipelineSpec pins
-    * them too). A deployment sets them through the standard
-    * `spark.sql.*` settings: at 100× scale a fixed 32-way sort of a
-    * 60M-row join output OOMs at the default heap (the r17 q_pagerank
-    * smoke), so a wider `coalescePartitions.initialPartitionNum`,
-    * with bucket counts sized to match, is the knob sized per SF.
+    * posture. AQE's initial partition number, the parquet codec and
+    * the shuffled-hash-join local-map threshold are Spark's own
+    * defaults (initial = `shuffle.partitions`, snappy, 0 —
+    * PipelineSpec pins them). A
+    * deployment sets them through the standard `spark.sql.*`
+    * settings: at 100× scale a fixed 32-way sort of a 60M-row join
+    * output OOMs at the default heap (the r17 q_pagerank smoke), so a
+    * wider `coalescePartitions.initialPartitionNum` is the knob sized
+    * per SF.
     *
     * `fs.file.impl` is [[NioLocalFileSystem]]: `file://` paths resolve
     * to a `LocalFileSystem` that sets permissions through `java.nio`

@@ -117,12 +117,22 @@ class ConfigSpec extends SparkSpec {
     assert(preset.source.asInstanceOf[graft.sources.JdbcSource]
       .numPartitions === 8)
     assert(preset.target.asInstanceOf[graft.targets.NodeTarget].softDelete)
-    val pf = PresetFactory.create(Map("f" -> PresetConfig(
+    val pj = PresetFactory.create(Map("j" -> PresetConfig(
       source = Map("type" -> "file",
         "options" -> Map("filePath" -> "/tmp/x.json")),
-      target = Map("type" -> "file", "options" -> Map(
-        "path" -> "/tmp/t2", "partitions" -> "16")))), "f")
-    assert(pf.target.asInstanceOf[graft.targets.FileTarget].partitions === 16)
+      target = Map("type" -> "jdbc", "options" -> Map(
+        "url" -> "jdbc:derby:memory:cfg", "table" -> "t",
+        "batchSize" -> "16")))), "j")
+    assert(pj.target.asInstanceOf[graft.targets.JdbcTarget].batchSize === 16)
+    // a file target takes only its path
+    val pt = intercept[PresetFactory.ConfigException] {
+      PresetFactory.create(Map("f" -> PresetConfig(
+        source = Map("type" -> "file",
+          "options" -> Map("filePath" -> "/tmp/x.json")),
+        target = Map("type" -> "file", "options" -> Map(
+          "path" -> "/tmp/t2", "partitions" -> "16")))), "f")
+    }
+    assert(pt.getMessage.contains("Unknown option 'partitions'"))
     // unparseable strings still fail validation with the type message
     val bad = Map("p" -> PresetConfig(
       source = Map("type" -> "jdbc", "options" -> Map(

@@ -191,6 +191,24 @@ class PipelineSpec extends SparkSpec {
     assert(progress(ImportEvent.DoRemoveData).sampleIds === Seq("c"))
   }
 
+  test("an empty snapshot phase fires no events and never evaluates " +
+      "its frame: only non-empty phases take an id sample") {
+    val boom = udf((s: String) =>
+      if (s != null) throw new IllegalStateException("evaluated") else s)
+    def unreadable = Seq("x").toDF("id").select(boom($"id").as("id"))
+    val seen = scala.collection.mutable.ArrayBuffer[(ImportEvent.Value, Any)]()
+    graft.targets.DataTarget.dispatchSnapshotPhases(
+      (e, payload) => seen += (e -> payload),
+      Seq("a", "b").toDF("id"), 2L,
+      unreadable, 0L,
+      unreadable, 0L)
+    import ImportEvent._
+    assert(seen.map(_._1).toSeq === Seq(PreAddData, DoAddData, PostAddData))
+    val p = seen(1)._2.asInstanceOf[graft.targets.DataTarget.PhaseProgress]
+    assert(p.count === 2L && p.sampleIds.toSet === Set("a", "b"))
+    assert(seen(2)._2 === 2L)
+  }
+
   test("a no-op sync commits nothing in every layout: each state file " +
       "keeps its name and mtime, the result is (0, 0, 0) and no phase " +
       "event fires; a first sync from an empty source creates the state") {
@@ -210,98 +228,40 @@ class PipelineSpec extends SparkSpec {
         target, Mapper(Seq("id" -> "id", "name" -> "name")),
         idAttribute = "id", versionAttribute = Some("version"))
     val rows = (1 to 40).map(i => (s"id$i", 1L, s"n$i"))
-    Seq(0 -> 0, 4 -> 0, 0 -> 4).foreach { case (buckets, partitions) =>
-      val layout = s"buckets=$buckets partitions=$partitions"
-      val dir = tmpDir("pipeline-noop")
-      val target = FileTarget(s"$dir/target", buckets = buckets,
-        partitions = partitions)
-      new ImportService(preset(target, rows)).importData(spark)
-      val before = files(dir)
-      Thread.sleep(20) // a rewrite would move the millisecond mtimes
-      val seen = scala.collection.mutable.ArrayBuffer[(ImportEvent.Value, Any)]()
-      val r = new ImportService(preset(target, rows))
-        .on((e, payload) => seen += (e -> payload)).importData(spark)
-      assert((r.added, r.updated, r.removed) === ((0L, 0L, 0L)), layout)
-      assert(files(dir) === before, layout)
-      import ImportEvent._
-      assert(seen.map(_._1).toSeq ===
-        Seq(PreComputeChanges, PreImportData, Finalize), layout)
-      assert(seen.last._2 === r, layout)
-      assert(spark.read.parquet(s"$dir/target").count() === 40L, layout)
-    }
+    val dir = tmpDir("pipeline-noop")
+    val target = FileTarget(s"$dir/target")
+    new ImportService(preset(target, rows)).importData(spark)
+    val before = files(dir)
+    Thread.sleep(20) // a rewrite would move the millisecond mtimes
+    val seen = scala.collection.mutable.ArrayBuffer[(ImportEvent.Value, Any)]()
+    val r = new ImportService(preset(target, rows))
+      .on((e, payload) => seen += (e -> payload)).importData(spark)
+    assert((r.added, r.updated, r.removed) === ((0L, 0L, 0L)))
+    assert(files(dir) === before)
+    import ImportEvent._
+    assert(seen.map(_._1).toSeq ===
+      Seq(PreComputeChanges, PreImportData, Finalize))
+    assert(seen.last._2 === r)
+    assert(spark.read.parquet(s"$dir/target").count() === 40L)
     // first sync from an EMPTY source still creates a readable state
-    // (flat: files at the path; bucketed: the catalog table) and its
-    // no-op re-run keeps it
-    Seq(0, 4).foreach { buckets =>
-      val dir = tmpDir("pipeline-empty-first")
-      val target = FileTarget(s"$dir/target", buckets = buckets)
-      val r1 = new ImportService(preset(target, Nil)).importData(spark)
-      assert((r1.added, r1.updated, r1.removed) === ((0L, 0L, 0L)))
-      assert(target.currentState(spark).count() === 0L)
-      if (buckets > 0) {
-        // the catalog name FileTarget derives from the path
-        val name = "graft_state_" + java.security.MessageDigest
-          .getInstance("MD5").digest(s"$dir/target".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16)
-        assert(spark.catalog.tableExists(name))
-      } else assert(spark.read.parquet(s"$dir/target").count() === 0L)
-      val before = files(dir)
-      Thread.sleep(20)
-      new ImportService(preset(target, Nil)).importData(spark)
-      assert(files(dir) === before)
-      val r3 = new ImportService(preset(target, rows.take(3))).importData(spark)
-      assert(r3.added === 3L)
-      assert(target.currentState(spark).count() === 3L)
-    }
-  }
-
-  test("partitioned copy-on-write: untouched partition dirs are not " +
-      "rewritten") {
-    val dir = tmpDir("pipeline-cow")
-    val target = FileTarget(s"$dir/target", partitions = 8)
-    def preset(data: Seq[(String, Long, String)]) = Preset(
-      InlineSource(s => { import s.implicits._
-        data.toDF("id", "version", "name") }),
-      target, Mapper(Seq("name" -> "name")),
-      idAttribute = "id", versionAttribute = Some("version"))
-    val seed = (1 to 200).map(i => (s"id$i", 1L, s"v$i"))
-    new ImportService(preset(seed)).importData(spark)
-
-    def listing(): Map[String, Set[String]] = {
-      val root = new java.io.File(s"$dir/target")
-      root.listFiles().filter(_.getName.startsWith("pt="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filter(_.endsWith(".parquet")).toSet).toMap
-    }
-    val before = listing()
-    assert(before.nonEmpty)
-
-    // delta: update id1 (newer), add idNEW, drop id2; everything else
-    // re-asserted identically (no change)
-    val delta = seed.filterNot(_._1 == "id2")
-      .map { case ("id1", _, _) => ("id1", 2L, "v1b"); case x => x } :+
-      (("idNEW", 1L, "new"))
-    val r = new ImportService(preset(delta)).importData(spark)
-    assert((r.added, r.updated, r.removed) === ((1L, 1L, 1L)))
-
-    val after = listing()
-    val touched = before.keySet.union(after.keySet)
-      .filter(k => before.get(k) != after.get(k))
-    // only the buckets of id1/id2/idNEW may differ: ≤ 3 dirs
-    assert(touched.size <= 3, s"rewrote $touched")
-    assert(touched.size < before.size, "everything was rewritten")
-
-    // and the merged state is exactly right
-    val state = spark.read.parquet(s"$dir/target")
-    import spark.implicits._
-    val got = state.select("id", "version", "name")
-      .as[(String, Long, String)].collect().toSet
-    val want = delta.toSet
-    assert(got === want)
+    // and its no-op re-run keeps it
+    val edir = tmpDir("pipeline-empty-first")
+    val empty = FileTarget(s"$edir/target")
+    val r1 = new ImportService(preset(empty, Nil)).importData(spark)
+    assert((r1.added, r1.updated, r1.removed) === ((0L, 0L, 0L)))
+    assert(empty.currentState(spark).count() === 0L)
+    assert(spark.read.parquet(s"$edir/target").count() === 0L)
+    val ebefore = files(edir)
+    Thread.sleep(20)
+    new ImportService(preset(empty, Nil)).importData(spark)
+    assert(files(edir) === ebefore)
+    val r3 = new ImportService(preset(empty, rows.take(3))).importData(spark)
+    assert(r3.added === 3L)
+    assert(empty.currentState(spark).count() === 3L)
   }
 
   test("compaction: flat state rewritten to the byte-target file " +
-      "count, content byte-identical, idempotent; bucketed is a no-op") {
+      "count, content byte-identical, idempotent") {
     val dir = tmpDir("pipeline-compact")
     val target = FileTarget(s"$dir/state")
     val rows = (1 to 500).map(i => (s"id$i", i.toLong, s"payload-$i"))
@@ -323,10 +283,30 @@ class PipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/state.compact-staging").exists())
     // second run: already compact -> no rewrite
     assert(target.compact(spark, targetFileBytes = 1L << 30) === -1L)
-    // bucketed layout: always a no-op (one file per bucket by write)
-    val bt = FileTarget(s"$dir/bstate", buckets = 4)
-    bt.writeState(spark, rows.toDF("id", "version", "name"))
-    assert(bt.compact(spark) === -1L)
+  }
+
+  test("compaction: a state fragmented by appends is rewritten to " +
+      "ceil(bytes / target) files and every row survives") {
+    val dir = tmpDir("pipeline-compact-appends")
+    val target = FileTarget(s"$dir/state")
+    val rows = (1 to 300).map(i => (s"id$i", i.toLong, s"v$i"))
+    // three separate appends of four files each
+    rows.grouped(100).foreach { chunk =>
+      chunk.toDF("id", "version", "name").repartition(4)
+        .write.mode("append").parquet(s"$dir/state")
+    }
+    def dataFiles() = new java.io.File(s"$dir/state").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(dataFiles().length === 12)
+    val bytes = dataFiles().map(_.length).sum
+    val before = spark.read.parquet(s"$dir/state")
+      .as[(String, Long, String)].collect().toSet
+    // a target of a third of the bytes (rounded up) asks for 3 files
+    val n = target.compact(spark, targetFileBytes = bytes / 3 + 1)
+    assert(n === 3L && dataFiles().length === 3)
+    val after = spark.read.parquet(s"$dir/state")
+      .as[(String, Long, String)].collect().toSet
+    assert(after === before && after.size === 300)
   }
 
   test("compaction as the FIRST op after a writer crash completes the " +
@@ -356,129 +336,86 @@ class PipelineSpec extends SparkSpec {
     assert(!graft.util.Fs.exists(staging))
   }
 
-  test("compaction: partitioned state collapses to one file per pt " +
-      "dir and every row survives") {
-    val dir = tmpDir("pipeline-compact-pt")
-    val target = FileTarget(s"$dir/state", partitions = 4)
-    val rows = (1 to 300).map(i => (s"id$i", i.toLong, s"v$i"))
-    // fragment each pt dir: three separate appends of the SAME layout
-    rows.grouped(100).foreach { chunk =>
-      chunk.toDF("id", "version", "name")
-        .withColumn("pt", pmod(xxhash64($"id".cast("string")), lit(4L)))
-        .repartition($"pt")
-        .write.mode("append").partitionBy("pt").parquet(s"$dir/state")
-    }
-    def ptFiles() = new java.io.File(s"$dir/state").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("pt="))
-      .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).toSeq
-    assert(ptFiles().exists(_ > 1)) // fragmented before
-    val before = spark.read.parquet(s"$dir/state")
-      .select($"id", $"version", $"name")
-      .as[(String, Long, String)].collect().toSet
-    val n = target.compact(spark, targetFileBytes = 1L << 30)
-    assert(n === 4L && ptFiles().forall(_ === 1))
-    val after = spark.read.parquet(s"$dir/state")
-      .select($"id", $"version", $"name")
-      .as[(String, Long, String)].collect().toSet
-    assert(after === before)
+  test("the session keeps Spark's defaults for AQE's initial partition " +
+      "number, the parquet codec and the shuffled-hash-join local-map " +
+      "threshold") {
+    val conf = spark.sessionState.conf
+    assert(conf.numShufflePartitions ===
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(conf.parquetCompressionCodec === "snappy")
+    assert(conf.getConf(org.apache.spark.sql.internal.SQLConf
+      .ADAPTIVE_MAX_SHUFFLE_HASH_JOIN_LOCAL_MAP_THRESHOLD) === 0L)
   }
 
-  test("bucketed state: the diff join consumes the bucketing — no " +
-      "state-side exchange; merged state matches the plain target") {
-    val dir = tmpDir("pipeline-bucketed")
-    def seed(t: FileTarget): Unit = t.writeState(spark, { import spark.implicits._
-      (1 to 200).filterNot(_ % 7 == 0)
-        .map(i => (s"id$i", 1L, "OLD")).toDF("id", "version", "name") })
+  test("copy-on-write: one sync that adds, updates and removes commits " +
+      "exactly the merged state and leaves no staging dir or manifest") {
+    val dir = tmpDir("pipeline-cow")
+    val target = FileTarget(s"$dir/target")
+    def preset(data: Seq[(String, Long, String)]) = Preset(
+      InlineSource(s => { import s.implicits._
+        data.toDF("id", "version", "name") }),
+      target, Mapper(Seq("name" -> "name")),
+      idAttribute = "id", versionAttribute = Some("version"))
+    val seed = (1 to 200).map(i => (s"id$i", 1L, s"v$i"))
+    new ImportService(preset(seed)).importData(spark)
+    // delta: update id1 (newer), add idNEW, drop id2; everything else
+    // re-asserted identically (no change)
+    val delta = seed.filterNot(_._1 == "id2")
+      .map { case ("id1", _, _) => ("id1", 2L, "v1b"); case x => x } :+
+      (("idNEW", 1L, "new"))
+    val r = new ImportService(preset(delta)).importData(spark)
+    assert((r.added, r.updated, r.removed) === ((1L, 1L, 1L)))
+    val got = spark.read.parquet(s"$dir/target")
+      .select(col("id"), col("version").cast("long"), col("name"))
+      .as[(String, Long, String)].collect().toSet
+    assert(got === delta.toSet)
+    assert(!new java.io.File(s"$dir/target.staging").exists())
+    assert(!new java.io.File(s"$dir/target.swap-manifest").exists())
+  }
+
+  test("sort-merge diff (broadcast joins off): a sync against a seeded " +
+      "state counts adds, updates and removes by version and keeps the " +
+      "unchanged rows as stored") {
+    val dir = tmpDir("pipeline-smj")
+    val target = FileTarget(s"$dir/state")
+    target.writeState(spark, (1 to 200).filterNot(_ % 7 == 0)
+      .map(i => (s"id$i", 1L, "OLD")).toDF("id", "version", "name"))
     def src = { import spark.implicits._
       (1 to 200).filterNot(_ % 10 == 0)
         .map(i => (s"id$i", if (i % 3 == 0) 2L else 1L, s"v$i"))
         .toDF("id", "version", "name") }
-    def preset(t: FileTarget) = Preset(
-      InlineSource(_ => src), t, Mapper(Seq("name" -> "name")),
+    val preset = Preset(
+      InlineSource(_ => src), target, Mapper(Seq("name" -> "name")),
       idAttribute = "id", versionAttribute = Some("version"))
-
-    // bucket count == session shuffle partitions: the source side's
-    // keying dedup already exchanges on __id at that count, so the
-    // join reuses it and the WHOLE diff runs on one exchange
-    val nShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // the session inherits Spark's own defaults for the settings the
-    // bucketing and the bench series depend on: AQE starts every
-    // shuffle at the bucket count, snappy state files, no SHJ rewrite
-    val conf = spark.sessionState.conf
-    assert(conf.numShufflePartitions === nShuffle)
-    assert(conf.parquetCompressionCodec === "snappy")
-    assert(conf.getConf(org.apache.spark.sql.internal.SQLConf
-      .ADAPTIVE_MAX_SHUFFLE_HASH_JOIN_LOCAL_MAP_THRESHOLD) === 0L)
-    val bucketed = FileTarget(s"$dir/bstate", buckets = nShuffle)
-    seed(bucketed)
-
-    // commit shape: writeState repartitions on the bucket expression
-    // first, so each task writes exactly ONE bucket file — ≤ buckets
-    // data files total, never tasks×buckets tiny files (the r7 sync
-    // regression)
-    val dataFiles = new java.io.File(s"$dir/bstate").listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(dataFiles.length <= nShuffle,
-      s"bucketed write produced ${dataFiles.length} files for $nShuffle buckets")
-
-    // plan shape: with broadcast off (the big-big regime the
-    // bucketing exists for), the diff's full-outer join must show
-    // exactly ONE exchange — the incoming source side's dedup
-    // shuffle; the state side reads its bucketing from the catalog
-    // (FileScan ... Bucketed: true, no exchange above it)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    val r = try {
       val keyed = graft.core.Records.keyRecords(src, "id", Some("version"))
-      val changes = graft.core.Diff
-        .computeDataChanges(keyed, bucketed.currentState(spark)).changes
-      val plan = changes.queryExecution.executedPlan.toString
-      val joinIdx = plan.indexOf("SortMergeJoin")
-      assert(joinIdx >= 0, plan.take(1500))
-      val below = plan.substring(joinIdx)
-      assert(below.contains("Bucketed: true"), below.take(2000))
-      val exchanges = "Exchange hashpartitioning".r.findAllIn(below).size
-      assert(exchanges === 1, below.take(2000))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-    // end to end: bucketed result == plain result
-    val r = new ImportService(preset(bucketed)).importData(spark)
-
-    // the commit REFRESHes the stable catalog entry (no DROP/CREATE):
-    // a SECOND sync's diff must still consume the bucketing with the
-    // single source-side exchange — the property must survive commits,
-    // not just the seed
-    val prev2 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val keyed2 = graft.core.Records.keyRecords(src, "id", Some("version"))
-      val plan2 = graft.core.Diff
-        .computeDataChanges(keyed2, bucketed.currentState(spark)).changes
+      val plan = graft.core.Diff
+        .computeDataChanges(keyed, target.currentState(spark)).changes
         .queryExecution.executedPlan.toString
-      val joinIdx2 = plan2.indexOf("SortMergeJoin")
-      assert(joinIdx2 >= 0, plan2.take(1500))
-      val below2 = plan2.substring(joinIdx2)
-      assert(below2.contains("Bucketed: true"), below2.take(2000))
-      assert("Exchange hashpartitioning".r.findAllIn(below2).size === 1,
-        below2.take(2000))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev2)
+      assert(plan.contains("SortMergeJoin"), plan.take(1500))
+      new ImportService(preset).importData(spark)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     // add: 10∤i ∧ 7|i = 28−2; update: 3|i ∧ 10∤i ∧ 7∤i = 66−6−9;
     // remove: 7∤i ∧ 10|i = 20−2
     assert((r.added, r.updated, r.removed) === ((26L, 51L, 18L)))
-    val plain = FileTarget(s"$dir/pstate")
-    seed(plain)
-    new ImportService(preset(plain)).importData(spark)
-    import spark.implicits._
-    def rows(p: String): Set[(String, Long, String)] =
-      spark.read.parquet(p).select(col("id"), col("version").cast("long"),
-        col("name")).as[(String, Long, String)].collect().toSet
-    assert(rows(s"$dir/bstate") === rows(s"$dir/pstate"))
+    val want = (1 to 200).filterNot(_ % 10 == 0).map { i =>
+      if (i % 7 == 0 || i % 3 == 0)
+        (s"id$i", if (i % 3 == 0) 2L else 1L, s"v$i")
+      else (s"id$i", 1L, "OLD")
+    }.toSet
+    val got = spark.read.parquet(s"$dir/state")
+      .select(col("id"), col("version").cast("long"), col("name"))
+      .as[(String, Long, String)].collect().toSet
+    assert(got === want)
   }
 
-  test("bucketed swap crash windows: a pending whole-dir manifest " +
-      "(`*:swap`) is replayed to completion before the next read") {
+  test("swap crash windows: a pending whole-dir manifest (`*:swap`) is " +
+      "replayed to completion before the next read; any other entry " +
+      "fails naming the root and leaves the state untouched") {
     val dir = tmpDir("pipeline-bcrash")
-    val target = FileTarget(s"$dir/bstate", buckets = 4)
+    val target = FileTarget(s"$dir/bstate")
     import spark.implicits._
     target.writeState(spark,
       (1 to 50).map(i => (s"id$i", 1L, s"v$i")).toDF("id", "version", "name"))
@@ -527,68 +464,18 @@ class PipelineSpec extends SparkSpec {
     write(Seq(staging.getPath, "*:swap"))
     assert(stateRows() === committed)
     assert(!manifest.exists() && live.exists())
-  }
 
-  test("partitioned swap crash windows: a pending manifest is " +
-      "replayed to completion before the next read") {
-    val dir = tmpDir("pipeline-crash")
-    val target = FileTarget(s"$dir/target", partitions = 8)
-    def preset(data: Seq[(String, Long, String)]) = Preset(
-      InlineSource(s => { import s.implicits._
-        data.toDF("id", "version", "name") }),
-      target, Mapper(Seq("name" -> "name")),
-      idAttribute = "id", versionAttribute = Some("version"))
-    val seed = (1 to 200).map(i => (s"id$i", 1L, s"v$i"))
-    new ImportService(preset(seed)).importData(spark)
-
-    import spark.implicits._
-    def stateRows(): Set[(String, Long, String)] =
-      target.currentState(spark).select("id", "version", "name")
-        .as[(String, Long, String)].collect().toSet
-    val committed = stateRows()
-    assert(committed.size === 200)
-
-    val root = new java.io.File(s"$dir/target")
-    def buckets() = root.listFiles().filter(_.getName.startsWith("pt="))
-    val manifest = new java.io.File(s"$dir/target.swap-manifest")
-
-    def write(f: java.io.File, lines: Seq[String]): Unit =
-      java.nio.file.Files.write(f.toPath, lines.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-    // window A — crash after rm(live) and before rename(staged):
-    // the staged dir holds the bucket's committed data, the live dir
-    // is gone, the manifest says swap. Recovery must rename it in.
-    val bx = buckets().head
-    val staging = new java.io.File(s"$dir/target.staging")
-    staging.mkdirs()
-    val staged = new java.io.File(staging, bx.getName)
-    assert(bx.renameTo(staged)) // live dir vanished, data only staged
-    write(manifest, Seq(staging.getPath, s"${bx.getName.drop(3)}:swap"))
-    assert(stateRows() === committed) // recovered, nothing lost
-    assert(!manifest.exists() && !staging.exists())
-    assert(bx.exists()) // the bucket is live again
-
-    // window B — crash before a drop bucket's rm ran: recovery
-    // deletes the live dir (all of the bucket's rows were removed).
-    val by = buckets().head
-    val droppedRows = committed.size - stateRows().size // 0 so far
-    staging.mkdirs() // staged next-state had nothing for this bucket
-    write(manifest, Seq(staging.getPath, s"${by.getName.drop(3)}:drop"))
-    target.currentState(spark).count()
-    assert(!manifest.exists() && !by.exists())
-
-    // window C — crash after a swap bucket's rename completed: the
-    // staged dir is gone, the live dir holds the NEW data. Recovery
-    // must leave it alone (this is the window where inferring "drop"
-    // from an absent staged dir would delete committed data).
-    val bz = buckets().head
-    val afterB = stateRows()
-    staging.mkdirs()
-    write(manifest, Seq(staging.getPath, s"${bz.getName.drop(3)}:swap"))
-    assert(stateRows() === afterB)
-    assert(!manifest.exists() && bz.exists())
-    assert(droppedRows === 0)
+    // a per-bucket entry (the manifest of a partitioned layout) is not
+    // replayed as a whole-dir swap: that would drop every bucket it
+    // did not name
+    copyDir(live, staging)
+    write(Seq(staging.getPath, "3:swap"))
+    val e = intercept[IllegalStateException](stateRows())
+    assert(e.getMessage.contains(live.getPath), e.getMessage)
+    assert(manifest.exists() && staging.exists())
+    assert(spark.read.parquet(live.getPath)
+      .select(col("id"), col("version").cast("long"), col("name"))
+      .as[(String, Long, String)].collect().toSet === committed)
   }
 
   test("setup validates source path (FileSource.php:26-35)") {

@@ -54,7 +54,7 @@ class StreamingSpec extends SparkSpec {
       val dir = tmpDir(s"replay-$n")
       val preset = Preset(
         InlineSource(_ => sys.error("stream feeds the batches")),
-        FileTarget(s"$dir/state", partitions = 4),
+        FileTarget(s"$dir/state"),
         Mapper(Seq("event_type" -> "event_type")),
         idAttribute = "user_id", versionAttribute = Some("version"),
         skipRemovedRecords = true)
